@@ -90,6 +90,15 @@ def split_sections(sanitized):
     return documents, definitions, statements
 
 
+def statement_key_header(documents, definitions):
+    """The header column of a statement key: the md5 of the header text,
+    a newline, then the text — the sanitized ``SET DOCUMENT`` and
+    ``DEFINE`` lines joined by newlines. Sanitized lines hold no newline,
+    so :meth:`DocumentCompiler.statement_key_triples` splits it back."""
+    text = '\n'.join(line for _, line in documents + definitions)
+    return hashlib.md5(text.encode('utf8')).hexdigest() + '\n' + text  # noqa: S324
+
+
 def edge_key(source_bel, target_bel, citation_db, citation_id, evidence,
              relation, subject_modifier, object_modifier):
     """Content-addressed edge id.
@@ -187,13 +196,23 @@ class DocumentCompiler:
         # node rows (md5 + flat columns + canonical JSON) are pure functions
         # of the canonical BEL string — share them across documents
         self._node_row_cache = {}
+        # statement keys: (term parser, prepared control state) per
+        # (header md5, qualified), so a key parse skips the header entirely
+        self._key_state_cache = {}
 
     def compile(self, lines):
         """Compile raw lines → dict of row lists (nodes, edges, warnings,
         metadata)."""
         sanitized = sanitize_lines(lines)
         documents, definitions, statements = split_sections(sanitized)
+        state = self._header_state(documents, definitions)
+        state.parse_statements(statements)
+        return state.result()
 
+    def _header_state(self, documents, definitions):
+        """A fresh compile state with the header applied: metadata,
+        definitions and term parser come from the per-header cache, the
+        control state is new."""
         key = (tuple(line for _, line in documents),
                tuple(line for _, line in definitions))
         cached = self._header_cache.get(key)
@@ -202,14 +221,13 @@ class DocumentCompiler:
             state.parse_document_section(documents)
             state.parse_definitions(definitions)
             state.make_parsers()
-            cached = (state.metadata, state.namespaces,
-                      state.namespace_patterns, state.annotation_terms,
-                      state.annotation_patterns, state.annotation_locals,
-                      list(state.warnings), state.term_parser)
             if len(self._header_cache) < 256:  # bound executor memory
-                self._header_cache[key] = cached
-            state.parse_statements(statements)
-            return state.result()
+                self._header_cache[key] = (
+                    state.metadata, state.namespaces,
+                    state.namespace_patterns, state.annotation_terms,
+                    state.annotation_patterns, state.annotation_locals,
+                    list(state.warnings), state.term_parser)
+            return state
 
         state = _CompileState(self)
         (state.metadata, state.namespaces, state.namespace_patterns,
@@ -217,8 +235,53 @@ class DocumentCompiler:
          state.annotation_locals, header_warnings, state.term_parser) = cached
         state.warnings = list(header_warnings)
         state.make_control()
-        state.parse_statements(statements)
-        return state.result()
+        return state
+
+    def statement_key_triples(self, header, statement, qualified):
+        """Triples of one distinct statement key — the stage-3 parse of
+        :func:`pybel_spark.pipeline.extract_triples_deduped`.
+
+        ``header`` is the key's :func:`statement_key_header`,
+        ``statement`` one sanitized statement line, and ``qualified``
+        says whether it stood under a citation and evidence in its
+        document.
+
+        The header definitions and the control state are prepared once
+        per ``(header md5, qualified)``: a qualified key is parsed under a
+        placeholder citation and evidence, an unqualified one under an
+        empty control state, so qualified relations raise exactly as they
+        did in the document while structural triples still emit. The
+        prepared control state is shared by every key of that header and
+        is never mutated; a control line would mutate it, so it is
+        rejected. Returns a list of ``(subject, predicate, object)``.
+        """
+        if is_control_line(statement):
+            raise ValueError(
+                'a statement key cannot be a control line: {!r}'
+                .format(statement))
+        header_md5, _, header_text = header.partition('\n')
+        cache_key = (header_md5, qualified)
+        prepared = self._key_state_cache.get(cache_key)
+        if prepared is None:
+            header_lines = header_text.split('\n') if header_text else []
+            documents, definitions, _ = split_sections(
+                enumerate(header_lines, start=1))
+            header_state = self._header_state(documents, definitions)
+            control = header_state.control
+            if qualified:
+                control.citation_db, control.citation_db_id = 'PubMed', '1'
+                control.evidence = '-'
+            prepared = (header_state.term_parser, control)
+            if len(self._key_state_cache) < 256:  # bound executor memory
+                self._key_state_cache[cache_key] = prepared
+        state = _CompileState(self)
+        state.term_parser, state.control = prepared
+        # the line number reaches only warnings and edge rows, not triples
+        state.parse_statements([(1, statement)])
+        return [(e['triple_subject'], e['triple_predicate'],
+                 e['triple_object'])
+                for e in state.edges.values()
+                if e['triple_subject'] is not None]
 
 
 class _CompileState:

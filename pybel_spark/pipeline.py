@@ -159,22 +159,20 @@ def _statement_split_func(catalog_bc, citation_clearing,
     import pandas as pd
 
     from .bel.compiler import _DEFINE_RE, _unquote, sanitize_lines, \
-        split_sections
+        split_sections, statement_key_header
     from .bel.control import ControlState, is_control_line
 
     def split(batches):
-        import hashlib as _hashlib
-
         from .bel.grammar import Scanner
 
         resources = catalog_bc.value
         header_defs_cache = {}
 
-        def annotation_defs(header_md5, definitions):
+        def annotation_defs(header, definitions):
             """Annotation definitions exactly as _CompileState.parse_definitions
             resolves them (first definition wins; failed defines leave the
             keyword undefined). Memoized per distinct header."""
-            cached = header_defs_cache.get(header_md5)
+            cached = header_defs_cache.get(header)
             if cached is not None:
                 return cached
             terms, patterns, locals_ = {}, {}, {}
@@ -201,7 +199,7 @@ def _statement_split_func(catalog_bc, citation_clearing,
                     pass  # failed define → keyword stays undefined
             cached = (terms, patterns, locals_)
             if len(header_defs_cache) < 256:  # bound executor memory
-                header_defs_cache[header_md5] = cached
+                header_defs_cache[header] = cached
             return cached
 
         for pdf in batches:
@@ -216,11 +214,9 @@ def _statement_split_func(catalog_bc, citation_clearing,
                 sanitized = sanitize_lines(lines)
                 documents_s, definitions, statements = \
                     split_sections(sanitized)
-                header = '\n'.join(
-                    line for _, line in list(documents_s) + list(definitions))
-                header_md5 = _hashlib.md5(header.encode('utf8')).hexdigest()
+                header = statement_key_header(documents_s, definitions)
                 terms, patterns, locals_ = \
-                    annotation_defs(header_md5, definitions)
+                    annotation_defs(header, definitions)
                 control = ControlState(
                     annotation_to_term=terms,
                     annotation_to_pattern=patterns,
@@ -257,7 +253,7 @@ def _statement_split_func(catalog_bc, citation_clearing,
                     qualified = bool(
                         control.citation_is_set and control.evidence
                         and not control.get_missing_required_annotations())
-                    headers.append(header_md5 + '\n' + header)
+                    headers.append(header)
                     stmts.append(line)
                     quals.append(qualified)
             yield pd.DataFrame({'header': headers, 'statement': stmts,
@@ -289,52 +285,62 @@ def statement_keys(documents: DataFrame, catalog=None, compiler_options=None,
     )
 
 
-def _statement_parse_func(catalog_bc, parse_options, with_key_hash=False):
-    """Stage-3 mapInPandas function: parse each distinct statement key
-    under a context reconstructed from its qualified flag. With
-    ``with_key_hash`` the input rows carry a ``key_hash`` column that is
-    propagated onto every emitted triple (the parse-index layout)."""
+#: mapInPandas output schema of the stage-3 parse when it keeps the key
+_KEYED_TRIPLES_SCHEMA = ('key_hash string, subject string, '
+                         'predicate string, object string')
+
+
+def _parse_statement_keys(keys: DataFrame, catalog_bc, parse_options,
+                          with_key_hash=False) -> DataFrame:
+    """Stage 3 of the dedup parse: the triples of each distinct statement
+    key, one row per triple. Each key is parsed by
+    :meth:`DocumentCompiler.statement_key_triples` against a compile state
+    prepared once per header. With ``with_key_hash`` the input carries a
+    ``key_hash`` column that is kept on every emitted triple (the
+    parse-index layout).
+
+    The keys are first spread round-robin over
+    ``defaultParallelism`` partitions. AQE sizes the partitions of the
+    preceding distinct by bytes, and the keys are short strings, so it
+    coalesces them into one partition; but this stage costs CPU per row,
+    and one partition would parse every key in a single Python task. A
+    ``repartition(n)`` is a ``REPARTITION_BY_NUM`` exchange, which AQE
+    leaves at ``n`` partitions."""
     import pandas as pd
+
+    from .schemas import TRIPLES_SCHEMA
 
     def parse(batches):
         compiler = DocumentCompiler(resources=catalog_bc.value,
                                     **parse_options)
         for pdf in batches:
-            keys, subjects, predicates, objects = [], [], [], []
+            key_hashes, subjects, predicates, objects = [], [], [], []
             key_vals = pdf['key_hash'] if with_key_hash else \
                 [None] * len(pdf)
             for khash, header, stmt, qualified in zip(
                     key_vals, pdf['header'], pdf['statement'],
                     pdf['qualified']):
-                header_lines = header.split('\n')[1:]  # drop the md5 prefix
-                if qualified:
-                    # the in-situ context had citation+evidence(+required
-                    # annotations); a dummy context reproduces the gate
-                    doc_lines = header_lines + [
-                        'SET Citation = {"PubMed", "1"}',
-                        'SET SupportingText = "-"',
-                        stmt,
-                    ]
-                else:
-                    # bare context: qualified relations raise exactly as
-                    # they did in situ; structural triples still emit
-                    doc_lines = header_lines + [stmt]
-                result = compiler.compile(doc_lines)
-                for e in result['edges']:
-                    if e['triple_subject'] is not None:
-                        keys.append(khash)
-                        subjects.append(e['triple_subject'])
-                        predicates.append(e['triple_predicate'])
-                        objects.append(e['triple_object'])
+                for s, p, o in compiler.statement_key_triples(
+                        header, stmt, qualified):
+                    key_hashes.append(khash)
+                    subjects.append(s)
+                    predicates.append(p)
+                    objects.append(o)
             out = {}
             if with_key_hash:
-                out['key_hash'] = keys
+                out['key_hash'] = key_hashes
             out['subject'] = subjects
             out['predicate'] = predicates
             out['object'] = objects
             yield pd.DataFrame(out)
 
-    return parse
+    cols = ['header', 'statement', 'qualified']
+    if with_key_hash:
+        cols.insert(0, 'key_hash')
+    n = keys.sparkSession.sparkContext.defaultParallelism
+    return keys.select(*cols).repartition(n).mapInPandas(
+        parse,
+        schema=_KEYED_TRIPLES_SCHEMA if with_key_hash else TRIPLES_SCHEMA)
 
 
 def extract_triples_deduped(documents: DataFrame, catalog=None,
@@ -358,25 +364,31 @@ def extract_triples_deduped(documents: DataFrame, catalog=None,
     compiler runs (same annotation definitions, same warning-on-mutation
     semantics) to tag each statement with its in-situ qualified flag;
     stage 2: shuffle-distinct on md5(header)+statement+flag (short
-    strings, uniform keys); stage 3: parse the survivors — qualified ones
-    under a dummy citation/evidence, unqualified ones bare (so qualified
-    relations are rejected exactly as they were in situ). Parse cost
-    scales with UNIQUE content, not corpus size. The output equals
+    strings, uniform keys); stage 3: parse the survivors. Stage 3 prepares
+    the compile state once per (header md5, qualified flag) — the header
+    definitions and the term parser, plus a placeholder citation and
+    evidence for qualified keys or an empty control state for unqualified
+    ones (so qualified relations are rejected exactly as they were in
+    situ) — and parses each key's one line against it
+    (:meth:`DocumentCompiler.statement_key_triples`). Its input is
+    repartitioned round-robin over ``defaultParallelism`` partitions:
+    AQE sizes the distinct's partitions by bytes and would coalesce the
+    short keys into one partition, while stage 3 costs CPU per row, so
+    it must run as one wave across all cores. Parse cost scales with
+    UNIQUE content, not corpus size. The output equals
     :func:`extract_triples` on ANY corpus, including hostile pages with
     statements outside citation context and under ``required_annotations``
     (see tests). Use :func:`extract_triples` when per-document context
     (warnings, metrics, edges) is needed.
     """
-    from .schemas import TRIPLES_SCHEMA
-
     if catalog is None:
         catalog = load_corpus_catalog()
     _, _, parse_options = _dedup_parse_options(compiler_options)
     catalog_bc = documents.sparkSession.sparkContext.broadcast(catalog)
     unique = statement_keys(documents, catalog, compiler_options,
                             _catalog_bc=catalog_bc)
-    parse = _statement_parse_func(catalog_bc, parse_options)
-    return unique.mapInPandas(parse, schema=TRIPLES_SCHEMA).distinct()
+    return _parse_statement_keys(unique, catalog_bc, parse_options) \
+        .distinct()
 
 
 class GraphResult:

@@ -1,7 +1,28 @@
 """SparkSession factory with scale-appropriate defaults."""
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+#: a byte count, -1 (disabled), or a Spark size string such as ``32m``
+_BYTE_SIZE_RE = re.compile(r'-1|\d+(?:[kmgtp]b?|b)?', re.IGNORECASE)
+
+
+def broadcast_threshold(environ=None) -> str:
+    """``spark.sql.autoBroadcastJoinThreshold`` from
+    ``SPARK_GRAFT_BROADCAST_THRESHOLD`` (default 64 MB), checked before the
+    session is built so a malformed value names the variable instead of
+    failing later as an opaque Spark config error."""
+    environ = os.environ if environ is None else environ
+    value = environ.get('SPARK_GRAFT_BROADCAST_THRESHOLD')
+    if value is None:
+        return str(64 * 1024 * 1024)
+    value = value.strip()
+    if not _BYTE_SIZE_RE.fullmatch(value):
+        raise ValueError(
+            'SPARK_GRAFT_BROADCAST_THRESHOLD must be a byte count, -1 or a '
+            'Spark size string such as 32m; got {!r}'.format(value))
+    return value
 
 
 def get_spark(app_name='pybel-spark', cores=None, shuffle_partitions=None,
@@ -12,6 +33,7 @@ def get_spark(app_name='pybel-spark', cores=None, shuffle_partitions=None,
     AQE + skew-join handling are on so runtime re-planning can split hot
     partitions (hot namespaces / hot URLs) without manual tuning.
     """
+    threshold = broadcast_threshold()
     if cores is None:
         cores = int(os.environ.get('SPARK_GRAFT_CPUS', '32'))
     if shuffle_partitions is None:
@@ -35,9 +57,7 @@ def get_spark(app_name='pybel-spark', cores=None, shuffle_partitions=None,
         # 18.6 → ~6 s on the dim-768 near-dup bench row. Overridable for
         # smaller executors (r6 ADVICE): a 64 MB build side on a 1 GB
         # executor can OOM tasks that previously shuffle-joined safely
-        .config('spark.sql.autoBroadcastJoinThreshold',
-                os.environ.get('SPARK_GRAFT_BROADCAST_THRESHOLD',
-                               str(64 * 1024 * 1024)))
+        .config('spark.sql.autoBroadcastJoinThreshold', threshold)
         .config('spark.driver.memory', os.environ.get('SPARK_DRIVER_MEMORY', '8g'))
         .config('spark.ui.enabled', 'false')
         .config('spark.sql.session.timeZone', 'UTC')

@@ -42,6 +42,7 @@ Scale shape (mirrors bpe.py exactly):
 """
 import math
 import os
+import warnings
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -186,6 +187,10 @@ def _em_prune_loop(estep, vocab: dict, chars, vocab_size: int,
             # CJK corpus with more distinct codepoints than the target):
             # the pass cannot shrink further — return the floor instead
             # of looping forever (r6 ADVICE)
+            warnings.warn(
+                'unigram vocab stops at {} pieces, above vocab_size={}: '
+                'single characters are never pruned'.format(
+                    len(pruned), vocab_size), stacklevel=3)
             return pruned
         vocab = pruned
 
@@ -198,7 +203,10 @@ def train_unigram(word_counts: dict, vocab_size: int = 2000,
     dict — the fixture path (scripts/train_unigram.py), and the ground
     truth the distributed E-step is tested against. Pure function of its
     arguments: ties everywhere break on (count, piece) so retraining
-    reproduces the vocab byte-for-byte."""
+    reproduces the vocab byte-for-byte. Single characters are never
+    pruned, so when the corpus has more distinct characters than
+    ``vocab_size`` the returned vocab is larger than ``vocab_size`` and a
+    ``UserWarning`` says so."""
     chars = {c for w in word_counts for c in w}
     freq = seed_vocab_counts(word_counts, max_piece_len)
     seed = sorted(freq.items(), key=lambda kv: (-kv[1], kv[0]))[:seed_size]

@@ -4,7 +4,8 @@ literals) fails CI instead of surfacing as a scale incident.
 
 Plans are asserted on the exact strings Spark's formatted explain emits
 (Exchange operators, ReadSchema, PushedFilters), captured via
-``_jdf.queryExecution``.
+``_jdf.queryExecution``, or on the node classes and partitioning of the
+physical plan tree itself (:func:`plan_nodes`).
 """
 import re
 
@@ -22,6 +23,35 @@ def physical_plan(df) -> str:
 
 def optimized_plan(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def plan_nodes(df) -> list:
+    """Every node of the physical plan as JVM ``SparkPlan`` objects, with
+    the AQE wrapper and cached relations opened up."""
+    nodes, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        cls = node_class(node)
+        if cls == 'AdaptiveSparkPlanExec':
+            stack.append(node.executedPlan())
+            continue
+        if cls == 'InMemoryTableScanExec':
+            stack.append(node.relation().cachedPlan())
+        nodes.append(node)
+        stack.extend(seq_items(node.children()))
+    return nodes
+
+
+def node_class(jobj) -> str:
+    return jobj.getClass().getSimpleName()
+
+
+def seq_items(seq) -> list:
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def output_names(node) -> list:
+    return [a.name() for a in seq_items(node.output())]
 
 
 def n_exchanges(plan: str) -> int:
@@ -450,6 +480,36 @@ def test_parse_index_probe_is_slim_equi_antijoin(spark, docs_path,
         for s in key_scans), scans
 
 
+def test_statement_key_parse_input_is_round_robin_exchange(spark,
+                                                           docs_path):
+    """Stage 3 of the dedup parse costs CPU per key, but AQE sizes the
+    distinct-key partitions by bytes and coalesces the short keys into
+    one. Both callers must feed the stage-3 mapInPandas through an
+    explicit round-robin repartition into defaultParallelism partitions
+    (a REPARTITION_BY_NUM exchange, which AQE never coalesces)."""
+    from pybel_spark import parse_index as PI
+    from pybel_spark.pipeline import (extract_triples_deduped,
+                                      load_corpus_catalog, statement_keys)
+
+    docs = spark.read.parquet(docs_path)
+    catalog = load_corpus_catalog()
+    keys = PI._with_key_hash(statement_keys(docs, catalog))
+    index_parse = PI._keyed_triples(
+        keys, spark.sparkContext.broadcast(catalog), None)
+    n = spark.sparkContext.defaultParallelism
+    for df in (extract_triples_deduped(docs), index_parse):
+        nodes = plan_nodes(df)
+        [parse] = [m for m in nodes if node_class(m) == 'MapInPandasExec'
+                   and 'subject' in output_names(m)]
+        exchange = parse.child()
+        assert node_class(exchange) == 'ShuffleExchangeExec', \
+            [node_class(m) for m in nodes]
+        part = exchange.outputPartitioning()
+        assert node_class(part) == 'RoundRobinPartitioning', part.toString()
+        assert part.numPartitions() == n, part.toString()
+        assert exchange.shuffleOrigin().toString() == 'REPARTITION_BY_NUM'
+
+
 def test_host_link_graph_single_exchange(spark):
     """host_link_graph: anchor extraction + href resolution fuse into
     the page scan; the ONLY exchange is the (src_host, dst_host) hash
@@ -472,21 +532,31 @@ def test_semdedup_pairs_one_grouped_exchange_no_pair_join(spark):
     once (O(n·dim) bytes), never once per candidate pair (the previous
     salted-join + per-pair re-attach moved the payload quadratically).
     The pairs plan is scan → assign → one Exchange(list_id) →
-    FlatMapGroupsInPandas: no self-join, no salt key left anywhere."""
+    FlatMapGroupsInPandas: no join node of any kind, and the one
+    exchange is keyed on list_id alone (no salt key)."""
     from pybel_spark.textops import semdedup
 
     vectors = spark.read.parquet('/root/testdata/sf0.001/embeddings.parquet')
     with _no_auto_broadcast(spark):
         out = semdedup.semdedup_pairs(vectors, threshold=0.9, n_clusters=4,
                                       refine_iterations=0)
-        plan = formatted_plan(out)
-    # formatted explain prints each node twice (tree + detail section):
-    # count the detail sections
-    assert len(re.findall(r'\(\d+\) Exchange', plan)) == 1, plan
-    assert 'hashpartitioning(list_id' in plan, plan
-    assert 'FlatMapGroupsInPandas' in plan, plan
-    assert 'Join' not in plan, plan
-    assert '_salt' not in plan, plan
+        nodes = plan_nodes(out)
+    classes = [node_class(n) for n in nodes]
+    exchanges = [n for n in nodes if 'Exchange' in node_class(n)]
+    assert [node_class(n) for n in exchanges] == ['ShuffleExchangeExec'], \
+        classes
+    part = exchanges[0].outputPartitioning()
+    assert node_class(part) == 'HashPartitioning', part.toString()
+    assert [e.name() for e in seq_items(part.expressions())] == \
+        ['list_id'], part.toString()
+    [grouped] = [n for n in nodes
+                 if node_class(n) == 'FlatMapGroupsInPandasExec']
+    child = grouped.child()
+    while node_class(child) == 'SortExec':
+        child = child.child()
+    assert node_class(child) == 'ShuffleExchangeExec', classes
+    assert not [c for c in classes
+                if 'Join' in c or c == 'CartesianProductExec'], classes
 
 
 def test_bfs_result_plan_is_flat_checkpoint_union(spark):

@@ -1,0 +1,115 @@
+"""Stage 3 of the dedup parse, without Spark: parsing a statement key
+against the compile state prepared once per header must give the same
+triples as compiling the whole one-statement document the key stands for
+(header lines, then a placeholder citation and evidence when the key is
+qualified, then the statement), and must never change the prepared state
+that later keys of the same header share."""
+import copy
+import json
+import os
+
+import pytest
+
+from pybel_spark.bel.compiler import (DocumentCompiler, sanitize_lines,
+                                      split_sections, statement_key_header)
+from pybel_spark.bel.control import is_control_line
+from pybel_spark.corpus import load_corpus_catalog
+
+HERE = os.path.dirname(os.path.abspath(__file__))
+FIXTURES = os.path.join(os.path.dirname(HERE), 'fixtures')
+
+with open(os.path.join(FIXTURES, 'pool.json')) as f:
+    POOL = json.load(f)
+with open(os.path.join(FIXTURES, 'grammar_cases.json')) as f:
+    GRAMMAR_CASES = json.load(f)
+
+#: the corpus header, which defines LIST, PATTERN and URL annotations
+ANNOTATED_HEADER = POOL['header']
+#: the same header with its annotation definitions dropped
+NAMESPACE_HEADER = [ln for ln in ANNOTATED_HEADER
+                    if not ln.startswith('DEFINE ANNOTATION')]
+HEADERS = {'annotated': ANNOTATED_HEADER, 'namespaces': NAMESPACE_HEADER,
+           'empty': []}
+
+
+def _statements():
+    out = [case['statement'] for case in GRAMMAR_CASES]
+    for unit in POOL['units']:
+        _, _, statements = split_sections(sanitize_lines(unit['lines']))
+        out.extend(line for _, line in statements
+                   if not is_control_line(line))
+    return list(dict.fromkeys(out))
+
+
+STATEMENTS = _statements()
+
+
+def header_key(lines):
+    """The header column stage 1 emits for a page with these lines."""
+    documents, definitions, _ = split_sections(sanitize_lines(lines))
+    return statement_key_header(documents, definitions)
+
+
+def synthetic_document_triples(compiler, header_lines, statement,
+                               qualified):
+    """Triples of the key compiled as a whole one-statement document."""
+    context = ['SET Citation = {"PubMed", "1"}',
+               'SET SupportingText = "-"'] if qualified else []
+    result = compiler.compile(header_lines + context + [statement])
+    return sorted((e['triple_subject'], e['triple_predicate'],
+                   e['triple_object'])
+                  for e in result['edges'] if e['triple_subject'] is not None)
+
+
+def _compiler(citation_clearing):
+    return DocumentCompiler(resources=load_corpus_catalog(),
+                            citation_clearing=citation_clearing)
+
+
+@pytest.mark.parametrize('citation_clearing', [True, False])
+@pytest.mark.parametrize('header_name', sorted(HEADERS))
+def test_key_triples_equal_synthetic_document(header_name,
+                                              citation_clearing):
+    header_lines = HEADERS[header_name]
+    header = header_key(header_lines)
+    keyed = _compiler(citation_clearing)
+    whole = _compiler(citation_clearing)
+    n_with_triples = {True: 0, False: 0}
+    for statement in STATEMENTS:
+        for qualified in (True, False):
+            want = synthetic_document_triples(whole, header_lines,
+                                              statement, qualified)
+            got = sorted(keyed.statement_key_triples(header, statement,
+                                                     qualified))
+            assert got == want, (statement, qualified)
+            n_with_triples[qualified] += bool(got)
+    if header_name != 'empty':
+        # both context gates are exercised: qualified keys emit the
+        # qualified relations, unqualified keys only structural triples
+        assert n_with_triples[True] > n_with_triples[False] > 0, \
+            n_with_triples
+
+
+def test_key_parse_never_mutates_prepared_state():
+    compiler = _compiler(True)
+    header = header_key(ANNOTATED_HEADER)
+    compiler.statement_key_triples(header, STATEMENTS[0], True)
+    compiler.statement_key_triples(header, STATEMENTS[0], False)
+    prepared = {k: copy.deepcopy(v[1].__dict__)
+                for k, v in compiler._key_state_cache.items()}
+    assert len(prepared) == 2
+
+    first = {(s, q): compiler.statement_key_triples(header, s, q)
+             for s in STATEMENTS for q in (True, False)}
+    for control_line in ('SET Citation = {"PubMed", "2"}', 'UNSET ALL',
+                         'SET TESTAN1 = "1"', 'UNSET SupportingText'):
+        with pytest.raises(ValueError):
+            compiler.statement_key_triples(header, control_line, True)
+    after = {k: v[1].__dict__ for k, v in compiler._key_state_cache.items()}
+    assert after == prepared
+
+    # a fresh compiler walking the keys in reverse order sees the same
+    # triples, so no key depends on what was parsed before it
+    fresh = _compiler(True)
+    for (s, q) in reversed(list(first)):
+        assert fresh.statement_key_triples(header, s, q) == first[s, q]

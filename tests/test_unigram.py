@@ -2,6 +2,7 @@
 truth, EM statistics, distributed E-step parity, fixture contract."""
 import itertools
 import math
+import warnings
 
 import pytest
 from pyspark.sql import functions as F
@@ -95,6 +96,25 @@ def test_train_terminates_when_chars_exceed_vocab_size():
     v = unigram.train_unigram(wc, vocab_size=10, seed_size=40, n_rounds=1)
     assert set(wc) <= set(v)          # every char survives
     assert len(v) >= 30               # the floor, not vocab_size
+
+
+def test_train_warns_when_vocab_exceeds_vocab_size():
+    """The single-char floor returns more pieces than vocab_size; the
+    caller is told instead of silently getting an oversized vocab."""
+    wc = {chr(0x4E00 + i): 1 for i in range(30)}  # 30 distinct CJK chars
+    with pytest.warns(UserWarning, match='vocab_size=10'):
+        v = unigram.train_unigram(wc, vocab_size=10, seed_size=40,
+                                  n_rounds=1)
+    assert len(v) > 10
+
+
+def test_train_within_vocab_size_does_not_warn():
+    wc = {'abab': 5, 'ba': 3, 'aab': 2}
+    with warnings.catch_warnings():
+        warnings.simplefilter('error')
+        v = unigram.train_unigram(wc, vocab_size=6, seed_size=20,
+                                  n_rounds=1)
+    assert len(v) <= 6
 
 
 def test_distributed_estep_matches_driver(spark):
