@@ -164,6 +164,16 @@ def _term_modifier(term):
     return None
 
 
+def _apply_control_line(control, number, line):
+    """Apply one ``SET``/``UNSET`` line to ``control``. A malformed line
+    raises at its failure point, keeping the mutations made before it."""
+    s = Scanner(line, number)
+    if s.read_word() == 'SET':
+        control.handle_set(s, line, number)
+    else:
+        control.handle_unset(s, line, number)
+
+
 class DocumentCompiler:
     """Compile one BEL document's sanitized lines into output rows.
 
@@ -237,23 +247,57 @@ class DocumentCompiler:
         state.make_control()
         return state
 
+    def statement_keys(self, lines):
+        """Statement keys of one masked page — stage 1 of
+        :func:`pybel_spark.pipeline.extract_triples_deduped`: one
+        ``(header, statement, qualified)`` per statement line, in page
+        order, from the header state and control-line code that
+        :meth:`compile` runs. ``qualified`` means that at that line a
+        citation and an evidence were set and no required annotation was
+        missing — the guards of a qualified relation, which
+        :meth:`statement_key_triples` replaces by a placeholder context.
+        """
+        documents, definitions, statements = split_sections(
+            sanitize_lines(lines))
+        header = statement_key_header(documents, definitions)
+        control = self._header_state(documents, definitions).control
+        keys = []
+        for number, line in statements:
+            if is_control_line(line):
+                try:
+                    _apply_control_line(control, number, line)
+                except Exception:
+                    # A malformed control line (UndefinedAnnotation,
+                    # MissingCitation, InvalidCitation*, ScannerError...)
+                    # is a warning in compile(), which goes on with the
+                    # page: the line mutates nothing after its failure
+                    # point, as in the reference parser. Do not re-raise;
+                    # equality with compile() is fuzzed in tests.
+                    pass
+                continue
+            keys.append((header, line, bool(
+                control.citation_is_set and control.evidence
+                and not control.get_missing_required_annotations())))
+        return keys
+
     def statement_key_triples(self, header, statement, qualified):
         """Triples of one distinct statement key — the stage-3 parse of
         :func:`pybel_spark.pipeline.extract_triples_deduped`.
 
         ``header`` is the key's :func:`statement_key_header`,
         ``statement`` one sanitized statement line, and ``qualified``
-        says whether it stood under a citation and evidence in its
-        document.
+        the flag :meth:`statement_keys` gave it in its document.
 
         The header definitions and the control state are prepared once
         per ``(header md5, qualified)``: a qualified key is parsed under a
         placeholder citation and evidence, an unqualified one under an
         empty control state, so qualified relations raise exactly as they
         did in the document while structural triples still emit. The
-        prepared control state is shared by every key of that header and
-        is never mutated; a control line would mutate it, so it is
-        rejected. Returns a list of ``(subject, predicate, object)``.
+        flag already includes ``required_annotations``, so the prepared
+        control state requires none. It is shared by every key of that
+        header and is never mutated; a control line would mutate it, so
+        it is rejected. Returns a list of ``(subject, predicate,
+        object)``.
         """
         if is_control_line(statement):
             raise ValueError(
@@ -268,6 +312,7 @@ class DocumentCompiler:
                 enumerate(header_lines, start=1))
             header_state = self._header_state(documents, definitions)
             control = header_state.control
+            control.required_annotations = []
             if qualified:
                 control.citation_db, control.citation_db_id = 'PubMed', '1'
                 control.evidence = '-'
@@ -398,12 +443,7 @@ class _CompileState:
 
     def _parse_statement_line(self, number, line):
         if is_control_line(line):
-            s = Scanner(line, number)
-            keyword = s.read_word()
-            if keyword == 'SET':
-                self.control.handle_set(s, line, number)
-            else:
-                self.control.handle_unset(s, line, number)
+            _apply_control_line(self.control, number, line)
             return
 
         # per-header statement-parse memo: web corpora repeat statements

@@ -32,16 +32,19 @@ grows with the corpus's unique-statement space (orders of magnitude
 below document count on web corpora), and parse cost is paid once per
 unique statement EVER.
 
-Parse notes: the novel keys are parsed by the same stage 3 as
-:func:`pybel_spark.pipeline.extract_triples_deduped`. Each executor
-prepares the compile state once per (header md5, qualified flag) — the
-header definitions, the term parser and a placeholder or empty control
-state — and parses each key's one statement line against it. Before
-the parse the keys are repartitioned round-robin over
-``defaultParallelism`` partitions: AQE sizes partitions by bytes and
-would put the short keys of a whole batch into one partition, while the
-parse costs CPU per row, so without the repartition one Python task
-would parse every novel key while the other cores idle.
+Parse notes: the batch keys come from the same stage 1 as
+:func:`pybel_spark.pipeline.extract_triples_deduped`
+(:meth:`~pybel_spark.bel.compiler.DocumentCompiler.statement_keys`), and
+the novel keys are parsed by the same stage 3, both from the caller's
+compiler options unchanged. Each executor prepares the compile state
+once per (header md5, qualified flag) — the header definitions, the
+term parser and a placeholder or empty control state — and parses each
+key's one statement line against it. Before the parse the keys are
+repartitioned round-robin over ``defaultParallelism`` partitions:
+AQE sizes partitions by bytes and would put the short keys of a whole
+batch into one partition, while the parse costs CPU per row, so without
+the repartition one Python task would parse every novel key while the
+other cores idle.
 
 Crash contract (same at-least-once + read-side-collapse discipline as
 the manifest committer): :func:`parse_index_update` appends ``triples/``
@@ -73,8 +76,8 @@ import json
 
 from pyspark.sql import DataFrame, functions as F
 
-from .pipeline import (_dedup_parse_options, _parse_statement_keys,
-                       load_corpus_catalog, statement_keys)
+from .pipeline import (_parse_statement_keys, load_corpus_catalog,
+                       statement_keys)
 from .textops.sidecar import (read_json_sidecar, sidecar_exists,
                               write_json_sidecar)
 
@@ -117,20 +120,12 @@ def _check_options(spark, path: str, compiler_options) -> None:
             'options'.format(path, meta['options'], fp))
 
 
-def _keyed_triples(novel: DataFrame, catalog_bc,
-                   compiler_options) -> DataFrame:
-    """The stage-3 parse of the novel keys, keeping ``key_hash`` on every
-    triple (see the module parse notes)."""
-    _, _, parse_options = _dedup_parse_options(compiler_options)
-    return _parse_statement_keys(novel, catalog_bc, parse_options,
-                                 with_key_hash=True)
-
-
 def _parse_and_write(novel: DataFrame, path: str, catalog_bc,
                      compiler_options, mode: str) -> None:
     """Parse the novel keys and persist results — triples FIRST, then
     keys (see the module crash contract)."""
-    _keyed_triples(novel, catalog_bc, compiler_options) \
+    _parse_statement_keys(novel, catalog_bc, compiler_options,
+                          with_key_hash=True) \
         .write.mode(mode).parquet(path + '/triples')
     novel.select('key_hash').write.mode(mode).parquet(path + '/keys')
 

@@ -134,149 +134,39 @@ def extract_triples(documents: DataFrame, catalog=None,
     return triples.distinct() if distinct else triples
 
 
-def _dedup_parse_options(compiler_options):
-    """Split compiler options into the stage-1 context-gate knobs and the
-    stage-3 re-parse options: the qualified-context gate (incl.
-    ``required_annotations``) is applied in stage 1 against the real
-    per-document state; the stage-3 re-parse runs under a dummy context
-    that deliberately can't satisfy annotation requirements, so they are
-    dropped there."""
-    options = dict(compiler_options or {})
-    citation_clearing = options.get('citation_clearing', True)
-    required_annotations = options.get('required_annotations')
-    parse_options = dict(options)
-    parse_options.pop('required_annotations', None)
-    return citation_clearing, required_annotations, parse_options
-
-
-def _statement_split_func(catalog_bc, citation_clearing,
-                          required_annotations):
-    """Stage-1 mapInPandas function: split each page into its definition
-    header + candidate statement lines, tagging each statement with its
-    in-situ qualified-context flag (see :func:`extract_triples_deduped`
-    for why this flag, and only this flag, of the surrounding control
-    state reaches the triple)."""
+def statement_keys(documents: DataFrame, catalog=None, compiler_options=None,
+                   _catalog_bc=None) -> DataFrame:
+    """Distinct (header, statement, qualified) statement keys of a corpus
+    — stages 1+2 of the dedup-parse pipeline, exposed for the cross-batch
+    parse index (:mod:`pybel_spark.parse_index`). Stage 1 is
+    :meth:`DocumentCompiler.statement_keys` on every page, which builds
+    the header column that :meth:`DocumentCompiler.statement_key_triples`
+    reads back in stage 3 (see :func:`extract_triples_deduped` for why
+    the qualified flag, and only that flag, of the surrounding control
+    state reaches the triple); the distinct shuffles short uniform
+    strings only."""
     import pandas as pd
 
-    from .bel.compiler import _DEFINE_RE, _unquote, sanitize_lines, \
-        split_sections, statement_key_header
-    from .bel.control import ControlState, is_control_line
+    if catalog is None and _catalog_bc is None:
+        catalog = load_corpus_catalog()
+    catalog_bc = _catalog_bc if _catalog_bc is not None else \
+        documents.sparkSession.sparkContext.broadcast(catalog)
+    options = compiler_options or {}
 
     def split(batches):
-        from .bel.grammar import Scanner
-
-        resources = catalog_bc.value
-        header_defs_cache = {}
-
-        def annotation_defs(header, definitions):
-            """Annotation definitions exactly as _CompileState.parse_definitions
-            resolves them (first definition wins; failed defines leave the
-            keyword undefined). Memoized per distinct header."""
-            cached = header_defs_cache.get(header)
-            if cached is not None:
-                return cached
-            terms, patterns, locals_ = {}, {}, {}
-            for _n, line in definitions:
-                m = _DEFINE_RE.match(line)
-                if m is None:
-                    continue
-                kind, keyword, how, rest = m.groups()
-                if kind != 'ANNOTATION':
-                    continue
-                if keyword in terms or keyword in patterns \
-                        or keyword in locals_:
-                    continue  # redefinition raises in compile → first wins
-                try:
-                    rest = rest.strip()
-                    if how == 'URL':
-                        terms[keyword] = resources.annotation(_unquote(rest))
-                    elif how == 'PATTERN':
-                        patterns[keyword] = re.compile(_unquote(rest))
-                    else:
-                        locals_[keyword] = set(
-                            re.findall(r'"((?:[^"\\]|\\.)*)"', rest))
-                except Exception:
-                    pass  # failed define → keyword stays undefined
-            cached = (terms, patterns, locals_)
-            if len(header_defs_cache) < 256:  # bound executor memory
-                header_defs_cache[header] = cached
-            return cached
-
+        compiler = DocumentCompiler(resources=catalog_bc.value, **options)
         for pdf in batches:
-            headers, stmts, quals = [], [], []
+            keys = []
             htmls = pdf['html'] if 'html' in pdf else [None] * len(pdf)
             for html, text in zip(htmls, pdf['text']):
                 if text is None and html is not None:
                     text = extract_text(bytes(html))
                 if text is None:
                     continue
-                lines = mask_non_bel_lines(text)
-                sanitized = sanitize_lines(lines)
-                documents_s, definitions, statements = \
-                    split_sections(sanitized)
-                header = statement_key_header(documents_s, definitions)
-                terms, patterns, locals_ = \
-                    annotation_defs(header, definitions)
-                control = ControlState(
-                    annotation_to_term=terms,
-                    annotation_to_pattern=patterns,
-                    annotation_to_local=locals_,
-                    citation_clearing=citation_clearing,
-                    required_annotations=required_annotations,
-                )
-                for number, line in statements:
-                    if is_control_line(line):
-                        # identical handling to compiler.parse_statements:
-                        # warnings abort the line but keep prior mutations
-                        s = Scanner(line, number)
-                        try:
-                            keyword = s.read_word()
-                            if keyword == 'SET':
-                                control.handle_set(s, line, number)
-                            else:
-                                control.handle_unset(s, line, number)
-                        except Exception:
-                            # Expected: BELSyntaxError subclasses raised by
-                            # handle_set/handle_unset on malformed control
-                            # lines (UndefinedAnnotation, MissingCitation,
-                            # InvalidCitation*, IllegalAnnotationValue,
-                            # ScannerError...). The real compile downstream
-                            # re-parses every line and RECORDS these as
-                            # warnings — here they only mean "this control
-                            # line mutates nothing", which is exactly what
-                            # the reference parser does after it logs.
-                            # Equivalence with the full compile is fuzzed in
-                            # tests (hostile-control corpus). Do not "fix"
-                            # this into a re-raise.
-                            pass
-                        continue
-                    qualified = bool(
-                        control.citation_is_set and control.evidence
-                        and not control.get_missing_required_annotations())
-                    headers.append(header)
-                    stmts.append(line)
-                    quals.append(qualified)
-            yield pd.DataFrame({'header': headers, 'statement': stmts,
-                                'qualified': quals})
+                keys.extend(compiler.statement_keys(mask_non_bel_lines(text)))
+            yield pd.DataFrame(keys,
+                               columns=['header', 'statement', 'qualified'])
 
-    return split
-
-
-def statement_keys(documents: DataFrame, catalog=None, compiler_options=None,
-                   _catalog_bc=None) -> DataFrame:
-    """Distinct (header, statement, qualified) statement keys of a corpus
-    — stages 1+2 of the dedup-parse pipeline, exposed for the cross-batch
-    parse index (:mod:`pybel_spark.parse_index`). The header column is
-    md5-prefixed exactly as :func:`extract_triples_deduped` stage 3
-    expects; the distinct shuffles short uniform strings only."""
-    if catalog is None and _catalog_bc is None:
-        catalog = load_corpus_catalog()
-    citation_clearing, required_annotations, _ = \
-        _dedup_parse_options(compiler_options)
-    catalog_bc = _catalog_bc if _catalog_bc is not None else \
-        documents.sparkSession.sparkContext.broadcast(catalog)
-    split = _statement_split_func(
-        catalog_bc, citation_clearing, required_annotations)
     return (
         documents.select('html', 'text')
         .mapInPandas(
@@ -290,7 +180,7 @@ _KEYED_TRIPLES_SCHEMA = ('key_hash string, subject string, '
                          'predicate string, object string')
 
 
-def _parse_statement_keys(keys: DataFrame, catalog_bc, parse_options,
+def _parse_statement_keys(keys: DataFrame, catalog_bc, compiler_options,
                           with_key_hash=False) -> DataFrame:
     """Stage 3 of the dedup parse: the triples of each distinct statement
     key, one row per triple. Each key is parsed by
@@ -310,9 +200,10 @@ def _parse_statement_keys(keys: DataFrame, catalog_bc, parse_options,
 
     from .schemas import TRIPLES_SCHEMA
 
+    options = compiler_options or {}
+
     def parse(batches):
-        compiler = DocumentCompiler(resources=catalog_bc.value,
-                                    **parse_options)
+        compiler = DocumentCompiler(resources=catalog_bc.value, **options)
         for pdf in batches:
             key_hashes, subjects, predicates, objects = [], [], [], []
             key_vals = pdf['key_hash'] if with_key_hash else \
@@ -359,10 +250,12 @@ def extract_triples_deduped(documents: DataFrame, catalog=None,
     lines) emit their triples regardless of context. So the pipeline can
     parse each DISTINCT (header, statement, qualified-flag) triple ONCE:
 
-    stage 1 (cheap, map-only): split each page into header + candidate
-    statement lines, running the SAME ``ControlState`` machine the full
-    compiler runs (same annotation definitions, same warning-on-mutation
-    semantics) to tag each statement with its in-situ qualified flag;
+    stage 1 (cheap, map-only): :meth:`DocumentCompiler.statement_keys`
+    splits each page into its header and statement lines and tags each
+    statement with its in-situ qualified flag. It runs the header state
+    and control-line code of :meth:`DocumentCompiler.compile` over the
+    page, and both stages build their compiler from the caller's
+    options unchanged;
     stage 2: shuffle-distinct on md5(header)+statement+flag (short
     strings, uniform keys); stage 3: parse the survivors. Stage 3 prepares
     the compile state once per (header md5, qualified flag) — the header
@@ -383,11 +276,10 @@ def extract_triples_deduped(documents: DataFrame, catalog=None,
     """
     if catalog is None:
         catalog = load_corpus_catalog()
-    _, _, parse_options = _dedup_parse_options(compiler_options)
     catalog_bc = documents.sparkSession.sparkContext.broadcast(catalog)
     unique = statement_keys(documents, catalog, compiler_options,
                             _catalog_bc=catalog_bc)
-    return _parse_statement_keys(unique, catalog_bc, parse_options) \
+    return _parse_statement_keys(unique, catalog_bc, compiler_options) \
         .distinct()
 
 

@@ -60,8 +60,7 @@ def _centroid_sims(assignments: DataFrame, centroids, id_col, vec_col
 
 def semdedup_pairs(vectors: DataFrame, threshold=0.7, n_clusters=16,
                    seed=7, refine_iterations=1, id_col='vec_id',
-                   vec_col='embedding', n_salt=32,
-                   _assignments=None) -> DataFrame:
+                   vec_col='embedding', _assignments=None) -> DataFrame:
     """(vec_a, vec_b, similarity) semantic-duplicate pairs: within-cluster
     cosine ≥ threshold, vec_a < vec_b.
 
@@ -77,8 +76,7 @@ def semdedup_pairs(vectors: DataFrame, threshold=0.7, n_clusters=16,
     paper's own lever — a cluster is also this stage's parallelism
     unit). Similarities are computed by the exact cosine_pairs numpy
     expression, so every (pair, similarity) is bit-identical to the
-    previous shape. ``n_salt`` is retained for signature compatibility
-    (the salted exchange it tuned no longer exists).
+    previous shape.
     """
     import numpy as np
 
@@ -124,8 +122,8 @@ def semdedup_pairs(vectors: DataFrame, threshold=0.7, n_clusters=16,
 
 
 def semdedup(vectors: DataFrame, threshold=0.7, n_clusters=16, seed=7,
-             refine_iterations=1, id_col='vec_id', vec_col='embedding',
-             n_salt=32) -> DataFrame:
+             refine_iterations=1, id_col='vec_id',
+             vec_col='embedding') -> DataFrame:
     """Full SemDeDup verdict table: (vec_id, cluster_id, centroid_sim,
     group_id, keep).
 
@@ -139,7 +137,7 @@ def semdedup(vectors: DataFrame, threshold=0.7, n_clusters=16, seed=7,
     assignments = assignments.persist()
     pairs = semdedup_pairs(
         vectors, threshold, n_clusters, seed, refine_iterations,
-        id_col, vec_col, n_salt, _assignments=assignments)
+        id_col, vec_col, _assignments=assignments)
 
     from .dedup import near_duplicate_clusters
 

@@ -456,8 +456,9 @@ def test_parse_index_probe_is_slim_equi_antijoin(spark, docs_path,
                                                  tmp_path):
     """The incremental-parse probe: the historical keys/ scan must read
     ONLY the key_hash column, and the batch-vs-index anti-join must be
-    a hash equi-join on that uniform key — never a nested-loop join
-    (which would cross the batch against the whole historical index)."""
+    a hash or sort-merge equi-join on that uniform key — never a
+    nested-loop join or cartesian product (which would cross the batch
+    against the whole historical index)."""
     from pybel_spark import parse_index as PI
     from pybel_spark.pipeline import load_corpus_catalog, statement_keys
 
@@ -469,15 +470,25 @@ def test_parse_index_probe_is_slim_equi_antijoin(spark, docs_path,
     keys = PI._with_key_hash(statement_keys(docs, catalog))
     known = spark.read.parquet(path + '/keys')
     novel = keys.join(known, on='key_hash', how='left_anti')
-    plan = physical_plan(novel)
-    assert 'NestedLoop' not in plan, plan
-    assert 'LeftAnti' in plan, plan
+    nodes = plan_nodes(novel)
+    classes = [node_class(n) for n in nodes]
+    assert 'BroadcastNestedLoopJoinExec' not in classes, classes
+    assert 'CartesianProductExec' not in classes, classes
+    [join] = [n for n in nodes if node_class(n) in (
+        'BroadcastHashJoinExec', 'ShuffledHashJoinExec', 'SortMergeJoinExec')]
+    assert join.joinType().toString() == 'LeftAnti', join.toString()
+    # one equi-key: the batch's key_hash expression against the stored
+    # key_hash column
+    assert join.leftKeys().size() == 1, join.toString()
+    assert [k.name() for k in seq_items(join.rightKeys())] == ['key_hash'], \
+        join.toString()
     # the keys/ parquet scan reads exactly one column
-    scans = re.findall(r'ReadSchema: struct<([^>]*)>', plan)
-    key_scans = [s for s in scans if 'key_hash' in s]
-    assert key_scans and all(
-        {c.split(':')[0] for c in s.split(',') if c} == {'key_hash'}
-        for s in key_scans), scans
+    key_scans = [n for n in nodes if node_class(n) == 'FileSourceScanExec'
+                 and 'key_hash' in output_names(n)]
+    assert key_scans, classes
+    for scan in key_scans:
+        assert list(scan.requiredSchema().fieldNames()) == ['key_hash'], \
+            scan.toString()
 
 
 def test_statement_key_parse_input_is_round_robin_exchange(spark,
@@ -487,17 +498,15 @@ def test_statement_key_parse_input_is_round_robin_exchange(spark,
     one. Both callers must feed the stage-3 mapInPandas through an
     explicit round-robin repartition into defaultParallelism partitions
     (a REPARTITION_BY_NUM exchange, which AQE never coalesces)."""
-    from pybel_spark import parse_index as PI
-    from pybel_spark.pipeline import (extract_triples_deduped,
-                                      load_corpus_catalog, statement_keys)
+    from pybel_spark import parse_index as PI, pipeline
 
     docs = spark.read.parquet(docs_path)
-    catalog = load_corpus_catalog()
-    keys = PI._with_key_hash(statement_keys(docs, catalog))
-    index_parse = PI._keyed_triples(
-        keys, spark.sparkContext.broadcast(catalog), None)
+    catalog = pipeline.load_corpus_catalog()
+    keys = PI._with_key_hash(pipeline.statement_keys(docs, catalog))
+    index_parse = pipeline._parse_statement_keys(
+        keys, spark.sparkContext.broadcast(catalog), {}, with_key_hash=True)
     n = spark.sparkContext.defaultParallelism
-    for df in (extract_triples_deduped(docs), index_parse):
+    for df in (pipeline.extract_triples_deduped(docs), index_parse):
         nodes = plan_nodes(df)
         [parse] = [m for m in nodes if node_class(m) == 'MapInPandasExec'
                    and 'subject' in output_names(m)]

@@ -32,7 +32,7 @@ def test_semdedup_groups_and_keep_policy(spark):
             (20, e3), (21, [0.0, 0.0, 0.0, 1.0])]
     out = semdedup.semdedup(
         _vectors(spark, rows), threshold=0.9, n_clusters=1,
-        refine_iterations=1, n_salt=4).orderBy('vec_id')
+        refine_iterations=1).orderBy('vec_id')
     got = {r['vec_id']: r.asDict() for r in out.collect()}
     assert len(got) == 7
 
@@ -72,7 +72,7 @@ def test_semdedup_is_cluster_local(spark):
                                  refine_iterations=0)
     by_list = {r['vec_id']: r['list_id'] for r in assigns.collect()}
     pairs = semdedup.semdedup_pairs(vecs, threshold=0.9, n_clusters=5,
-                                    refine_iterations=0, n_salt=2)
+                                    refine_iterations=0)
     for r in pairs.collect():
         assert by_list[r['vec_a']] == by_list[r['vec_b']]
 
@@ -86,7 +86,7 @@ def test_semdedup_pairs_threshold(spark):
     rows = [(0, e1), (1, near), (2, far)]
     pairs = semdedup.semdedup_pairs(
         _vectors(spark, rows), threshold=0.9, n_clusters=1,
-        refine_iterations=0, n_salt=4)
+        refine_iterations=0)
     got = {(r['vec_a'], r['vec_b']): r['similarity']
            for r in pairs.collect()}
     assert set(got) == {(0, 1)}
@@ -100,7 +100,7 @@ def test_semdedup_filter_drops_losers(spark):
     rows = [(0, e1), (1, e1), (2, [0.0, 1.0])]
     vecs = _vectors(spark, rows)
     verdicts = semdedup.semdedup(vecs, threshold=0.9, n_clusters=2,
-                                 refine_iterations=1, n_salt=2)
+                                 refine_iterations=1)
     docs = spark.createDataFrame(
         [(0, 'a'), (1, 'b'), (2, 'c')], 'doc_id int, text string')
     kept = semdedup.semdedup_filter(docs, verdicts)
@@ -112,5 +112,5 @@ def test_semdedup_empty_and_single(spark):
 
     one = _vectors(spark, [(7, [1.0, 2.0])])
     out = semdedup.semdedup(one, threshold=0.9, n_clusters=1,
-                            refine_iterations=0, n_salt=2).collect()
+                            refine_iterations=0).collect()
     assert len(out) == 1 and out[0]['keep'] and out[0]['group_id'] == 7

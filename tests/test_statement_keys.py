@@ -1,12 +1,15 @@
-"""Stage 3 of the dedup parse, without Spark: parsing a statement key
+"""The dedup parse, without Spark. Stage 3: parsing a statement key
 against the compile state prepared once per header must give the same
 triples as compiling the whole one-statement document the key stands for
 (header lines, then a placeholder citation and evidence when the key is
 qualified, then the statement), and must never change the prepared state
-that later keys of the same header share."""
+that later keys of the same header share. Stages 1 and 3 together: the
+triples of a page's statement keys must be the triples of compiling the
+page, under the same compiler options."""
 import copy
 import json
 import os
+import random
 
 import pytest
 
@@ -61,18 +64,17 @@ def synthetic_document_triples(compiler, header_lines, statement,
                   for e in result['edges'] if e['triple_subject'] is not None)
 
 
-def _compiler(citation_clearing):
+def _compiler(citation_clearing, required_annotations=None):
     return DocumentCompiler(resources=load_corpus_catalog(),
-                            citation_clearing=citation_clearing)
+                            citation_clearing=citation_clearing,
+                            required_annotations=required_annotations)
 
 
-@pytest.mark.parametrize('citation_clearing', [True, False])
-@pytest.mark.parametrize('header_name', sorted(HEADERS))
-def test_key_triples_equal_synthetic_document(header_name,
-                                              citation_clearing):
+def _check_key_triples(header_name, citation_clearing,
+                       required_annotations=None):
     header_lines = HEADERS[header_name]
     header = header_key(header_lines)
-    keyed = _compiler(citation_clearing)
+    keyed = _compiler(citation_clearing, required_annotations)
     whole = _compiler(citation_clearing)
     n_with_triples = {True: 0, False: 0}
     for statement in STATEMENTS:
@@ -88,6 +90,23 @@ def test_key_triples_equal_synthetic_document(header_name,
         # qualified relations, unqualified keys only structural triples
         assert n_with_triples[True] > n_with_triples[False] > 0, \
             n_with_triples
+
+
+@pytest.mark.parametrize('citation_clearing', [True, False])
+@pytest.mark.parametrize('header_name', sorted(HEADERS))
+def test_key_triples_equal_synthetic_document(header_name,
+                                              citation_clearing):
+    _check_key_triples(header_name, citation_clearing)
+
+
+@pytest.mark.parametrize('citation_clearing', [True, False])
+@pytest.mark.parametrize('header_name', sorted(HEADERS))
+def test_key_triples_ignore_required_annotations(header_name,
+                                                 citation_clearing):
+    """The qualified flag already includes ``required_annotations``, so
+    stage 3 must ignore them: a key parses as the synthetic document
+    compiled without them."""
+    _check_key_triples(header_name, citation_clearing, ['Species'])
 
 
 def test_key_parse_never_mutates_prepared_state():
@@ -113,3 +132,75 @@ def test_key_parse_never_mutates_prepared_state():
     fresh = _compiler(True)
     for (s, q) in reversed(list(first)):
         assert fresh.statement_key_triples(header, s, q) == first[s, q]
+
+
+#: control lines of the generated pages: valid and invalid citations,
+#: evidence, a required annotation with a legal and an illegal value,
+#: and every kind of UNSET
+FUZZ_CONTROLS = [
+    'SET Citation = {"PubMed", "j", "100"}',
+    'SET Citation = {"PubMed", "j", "200"}',
+    'SET Citation = {"BAD_TYPE", "x"}',
+    'SET Evidence = "e1"',
+    'SET Evidence = "e2"',
+    'SET Species = "9606"',
+    'SET Species = "not-a-taxon"',
+    'UNSET Citation',
+    'UNSET Evidence',
+    'UNSET Species',
+    'UNSET ALL',
+]
+
+
+def _pages():
+    """Every pool unit as a page under the pool header, then seeded pages
+    that interleave pool statements with random control lines."""
+    pages = [ANNOTATED_HEADER + unit['lines'] for unit in POOL['units']]
+    rng = random.Random(20261018)
+    for _ in range(60):
+        lines = list(ANNOTATED_HEADER)
+        for _ in range(rng.randint(3, 16)):
+            if rng.random() < 0.5:
+                lines.append(rng.choice(FUZZ_CONTROLS))
+            else:
+                lines.append(rng.choice(STATEMENTS))
+        pages.append(lines)
+    return pages
+
+
+PAGES = _pages()
+
+
+def _triples(edges):
+    return {(e['triple_subject'], e['triple_predicate'], e['triple_object'])
+            for e in edges if e['triple_subject'] is not None}
+
+
+def _dedup_parse_triples(options):
+    """Per page: the triples of its statement keys and of its compile,
+    each stage on its own compiler built from the same options."""
+    stage1, stage3, whole = (
+        DocumentCompiler(resources=load_corpus_catalog(), **options)
+        for _ in range(3))
+    out = []
+    for page in PAGES:
+        keys = set(stage1.statement_keys(page))
+        keyed = {t for key in keys
+                 for t in stage3.statement_key_triples(*key)}
+        out.append((keyed, _triples(whole.compile(page)['edges'])))
+    return out
+
+
+@pytest.mark.parametrize('options', [
+    {}, {'required_annotations': ['Species']}, {'citation_clearing': False}],
+    ids=['default', 'required_species', 'no_citation_clearing'])
+def test_dedup_parse_equals_compile(options):
+    per_page = _dedup_parse_triples(options)
+    for page, (keyed, whole) in zip(PAGES, per_page):
+        assert keyed == whole, page
+    if options.get('required_annotations'):
+        # the requirement removes qualified triples the default keeps,
+        # so the stage-3 parse must not apply it a second time
+        union = set().union(*(whole for _, whole in per_page))
+        default = set().union(*(w for _, w in _dedup_parse_triples({})))
+        assert union < default
