@@ -39,6 +39,18 @@ def mask_non_bel_lines(text):
     ]
 
 
+def masked_pages(pdf):
+    """``(text, masked lines)`` of every page of an Arrow batch, in row
+    order. The text is the ``text`` column, else the ``html`` column
+    through :func:`extract_text`; a page with neither is the empty page
+    ``''``, so every row yields exactly one page."""
+    htmls = pdf['html'] if 'html' in pdf else [None] * len(pdf)
+    for html, text in zip(htmls, pdf['text']):
+        if text is None:
+            text = '' if html is None else extract_text(bytes(html))
+        yield text, mask_non_bel_lines(text)
+
+
 def make_parse_func(catalog, compiler_options=None, spark=None):
     """Build the Arrow-batched parse function for ``mapInPandas``.
 
@@ -64,14 +76,8 @@ def make_parse_func(catalog, compiler_options=None, spark=None):
             out = {k: [] for k in (
                 'url', 'lang', 'text_sha256', 'n_lines', 'n_statements',
                 'nodes', 'edges', 'warnings')}
-            htmls = pdf['html'] if 'html' in pdf else [None] * len(pdf)
-            for url, html, text, lang in zip(
-                    pdf['url'], htmls, pdf['text'], pdf['lang']):
-                if text is None and html is not None:
-                    text = extract_text(bytes(html))
-                if text is None:
-                    text = ''
-                lines = mask_non_bel_lines(text)
+            for url, lang, (text, lines) in zip(
+                    pdf['url'], pdf['lang'], masked_pages(pdf)):
                 n_statements = sum(1 for ln in lines if ln)
                 result = compiler.compile(lines)
                 out['url'].append(url)
@@ -111,13 +117,8 @@ def extract_triples(documents: DataFrame, catalog=None,
         compiler = DocumentCompiler(resources=catalog_bc.value, **options)
         for pdf in batches:
             subjects, predicates, objects = [], [], []
-            htmls = pdf['html'] if 'html' in pdf else [None] * len(pdf)
-            for html, text in zip(htmls, pdf['text']):
-                if text is None and html is not None:
-                    text = extract_text(bytes(html))
-                if text is None:
-                    continue
-                result = compiler.compile(mask_non_bel_lines(text))
+            for _, lines in masked_pages(pdf):
+                result = compiler.compile(lines)
                 for e in result['edges']:
                     if e['triple_subject'] is not None:
                         subjects.append(e['triple_subject'])
@@ -157,13 +158,8 @@ def statement_keys(documents: DataFrame, catalog=None, compiler_options=None,
         compiler = DocumentCompiler(resources=catalog_bc.value, **options)
         for pdf in batches:
             keys = []
-            htmls = pdf['html'] if 'html' in pdf else [None] * len(pdf)
-            for html, text in zip(htmls, pdf['text']):
-                if text is None and html is not None:
-                    text = extract_text(bytes(html))
-                if text is None:
-                    continue
-                keys.extend(compiler.statement_keys(mask_non_bel_lines(text)))
+            for _, lines in masked_pages(pdf):
+                keys.extend(compiler.statement_keys(lines))
             yield pd.DataFrame(keys,
                                columns=['header', 'statement', 'qualified'])
 

@@ -1,6 +1,7 @@
 """SparkSession factory with scale-appropriate defaults."""
 import os
 import re
+from importlib.machinery import PathFinder
 
 from pyspark.sql import SparkSession
 
@@ -25,13 +26,48 @@ def broadcast_threshold(environ=None) -> str:
     return value
 
 
+#: the worker daemon that keeps Spark's own zip directories cached
+WORKER_DAEMON = 'pybel_spark.worker_daemon'
+
+
+def worker_daemon_conf(cwd=None, pythonpath=None) -> dict:
+    """``spark.python.daemon.module`` for :mod:`pybel_spark.worker_daemon`,
+    or ``{}`` when it must not be set.
+
+    The JVM starts the daemon as ``python -m <module>`` in its own working
+    directory (``cwd``, default the current one) with the driver's
+    ``PYTHONPATH`` (``pythonpath``, default the environment's) behind
+    Spark's archives. A daemon module the workers cannot import breaks
+    every Python task, so the module is named only when it can be found
+    from ``cwd`` or a directory on ``pythonpath``. Archives there do not
+    count: under spark-submit the ``--py-files`` archives are on the
+    driver's ``PYTHONPATH``, but workers only add them per task, after the
+    daemon has started."""
+    if cwd is None:
+        cwd = os.getcwd()
+    if pythonpath is None:
+        pythonpath = os.environ.get('PYTHONPATH', '')
+    path = [cwd] + [p for p in pythonpath.split(os.pathsep)
+                    if os.path.isdir(p)]
+    package = PathFinder.find_spec(WORKER_DAEMON.split('.')[0], path)
+    if package is None or not package.submodule_search_locations:
+        return {}
+    if PathFinder.find_spec(
+            WORKER_DAEMON, package.submodule_search_locations) is None:
+        return {}
+    return {'spark.python.daemon.module': WORKER_DAEMON}
+
+
 def get_spark(app_name='pybel-spark', cores=None, shuffle_partitions=None,
               extra_conf=None):
     """Build a local SparkSession.
 
     On a real cluster the same config block ships via spark-submit --conf;
     AQE + skew-join handling are on so runtime re-planning can split hot
-    partitions (hot namespaces / hot URLs) without manual tuning.
+    partitions (hot namespaces / hot URLs) without manual tuning. Python
+    workers run under :mod:`pybel_spark.worker_daemon` when they can import
+    it (:func:`worker_daemon_conf`), unless ``extra_conf`` names another
+    ``spark.python.daemon.module``.
     """
     threshold = broadcast_threshold()
     if cores is None:
@@ -62,6 +98,7 @@ def get_spark(app_name='pybel-spark', cores=None, shuffle_partitions=None,
         .config('spark.ui.enabled', 'false')
         .config('spark.sql.session.timeZone', 'UTC')
     )
-    for key, value in (extra_conf or {}).items():
+    conf = dict(worker_daemon_conf(), **(extra_conf or {}))
+    for key, value in conf.items():
         builder = builder.config(key, value)
     return builder.getOrCreate()

@@ -205,6 +205,39 @@ def test_malformed_web_inputs_survive(spark):
     assert triples == expected
 
 
+def test_all_none_page_is_the_empty_page(spark):
+    """A page whose html and text are both None is the empty page in all
+    three parse UDFs: the full parse keeps its one metrics row (lineage
+    counts documents), and the triple and statement-key paths emit
+    nothing for it."""
+    import hashlib
+
+    import pandas as pd
+
+    from pybel_spark.corpus import CorpusSpec, load_corpus_catalog
+    from pybel_spark.pipeline import (
+        make_parse_func, masked_pages, statement_keys)
+    from pybel_spark.schemas import DOCUMENTS_SCHEMA
+
+    text = CorpusSpec().doc_text(1)
+    pdf = pd.DataFrame({'url': ['u/none', 'u/text'], 'html': [None, None],
+                        'text': [None, text], 'lang': ['en', 'en']})
+    assert list(masked_pages(pdf)) == [
+        ('', ['']), (text, mask_non_bel_lines(text))]
+    rows = pd.concat(make_parse_func(load_corpus_catalog())([pdf]))
+    none = rows.set_index('url').loc['u/none']
+    assert (none['n_lines'], none['n_statements']) == (1, 0)
+    assert none['text_sha256'] == hashlib.sha256(b'').hexdigest()
+    assert len(none['nodes']) == len(none['edges']) == 0
+
+    docs = spark.createDataFrame(
+        [('u/none', None, None, None, 'en')], DOCUMENTS_SCHEMA)
+    assert [r['n_statements'] for r in
+            build_graph(docs).doc_metrics.collect()] == [0]
+    assert extract_triples(docs).count() == 0
+    assert statement_keys(docs).count() == 0
+
+
 def test_deduped_hostile_context_equivalence(spark):
     """ADVICE r2: a statement OUTSIDE a valid citation/evidence context must
     not leak triples through the pre-parse dedup path — while structural
