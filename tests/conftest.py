@@ -7,7 +7,15 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
 GOLDEN_DIR = os.path.join(HERE, 'golden')
 POOL_PATH = os.path.join(REPO, 'fixtures', 'pool.json')
-BEL_DIR = '/root/reference/src/pybel/testing/resources/bel'
+REFERENCE_SRC = '/root/reference/src/pybel'
+BEL_DIR = os.path.join(REFERENCE_SRC, 'testing', 'resources', 'bel')
+
+#: tests that read the reference checkout itself (its .bel documents, its
+#: compiler, its importers or its .belns/.belanno files); everything else runs
+#: from the frozen fixtures
+requires_reference = pytest.mark.skipif(
+    not os.path.isdir(REFERENCE_SRC),
+    reason='needs the reference checkout at {}'.format(REFERENCE_SRC))
 
 
 def load_golden(name):

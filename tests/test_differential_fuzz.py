@@ -17,7 +17,7 @@ sys.path.insert(0, os.path.join(REPO, 'fixtures'))
 from pybel_spark.bel.compiler import DocumentCompiler  # noqa: E402
 from pybel_spark.resources import reference_catalog  # noqa: E402
 
-from .conftest import load_pool  # noqa: E402
+from .conftest import load_pool, requires_reference  # noqa: E402
 
 HEADER = load_pool()['header']
 
@@ -113,6 +113,7 @@ def random_statement(rng):
                              random_term(rng))
 
 
+@requires_reference
 @pytest.mark.parametrize('seed,options', [
     (1, {}), (2, {}), (3, {}), (4, {}),
     (5, {'allow_naked_names': True}),

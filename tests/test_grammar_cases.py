@@ -7,7 +7,7 @@ import os
 import pytest
 
 from pybel_spark.bel.compiler import DocumentCompiler
-from pybel_spark.resources import reference_catalog
+from pybel_spark.corpus import load_corpus_catalog
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 CASES_PATH = os.path.join(os.path.dirname(HERE), 'fixtures', 'grammar_cases.json')
@@ -27,7 +27,7 @@ CONTEXT = [
 
 @pytest.mark.parametrize('case', CASES, ids=lambda c: c['statement'][:60])
 def test_grammar_case(case):
-    compiler = DocumentCompiler(resources=reference_catalog())
+    compiler = DocumentCompiler(resources=load_corpus_catalog())
     result = compiler.compile(HEADER + CONTEXT + [case['statement']])
 
     got_warnings = sorted(w['error_class'] for w in result['warnings'])

@@ -6,6 +6,8 @@ import sys
 import pytest
 from pyspark.sql import functions as F
 
+from .conftest import requires_reference
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -67,6 +69,7 @@ def _synthetic_hetionet():
     return {'nodes': nodes, 'edges': edges}
 
 
+@requires_reference
 def test_hetionet_differential_vs_reference(spark):
     from pybel_spark.io_hetionet import from_hetionet_json
 

@@ -153,8 +153,7 @@ def test_bel_script_round_trip(result):
         annotation_lists={'TESTAN1': ['1', '2', '3'],
                           'TESTAN2': ['1', '2', '3']},
     )
-    from pybel_spark.resources import reference_catalog
-    compiled = DocumentCompiler(resources=reference_catalog()).compile(lines)
+    compiled = DocumentCompiler(resources=load_corpus_catalog()).compile(lines)
 
     original_nodes = {r['node_bel'] for r in result.nodes.collect()}
     recompiled_nodes = {r['node_bel'] for r in compiled['nodes']}
