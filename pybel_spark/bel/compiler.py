@@ -99,30 +99,23 @@ def statement_key_header(documents, definitions):
     return hashlib.md5(text.encode('utf8')).hexdigest() + '\n' + text  # noqa: S324
 
 
-def edge_key(source_bel, target_bel, citation_db, citation_id, evidence,
-             relation, subject_modifier, object_modifier):
-    """Content-addressed edge id.
+def _edge_id(key):
+    """Content-addressed edge id of an edge identity tuple (see
+    :meth:`_CompileState.add_edge_row`).
 
     Same keying components as the reference (utils.py:143-175: source bel,
     target bel, citation, evidence, canonicalized relation+modifiers) but
     hashed over canonical JSON instead of a Python pickle, which is not
     reproducible across processes/languages.
     """
-    citation_str = None
-    if citation_db is not None:
-        citation_str = '{}:{}'.format(citation_db, citation_id)
-    payload = json.dumps(
-        [source_bel, target_bel, citation_str, evidence,
-         _canonicalize_modifier(subject_modifier),
-         _canonicalize_modifier(object_modifier),
-         relation],
-        sort_keys=True, separators=(',', ':'),
-    )
+    payload = json.dumps(key, sort_keys=True, separators=(',', ':'))
     return hashlib.md5(payload.encode('utf8')).hexdigest()  # noqa: S324
 
 
 def _canonicalize_modifier(modifier):
-    """Canonical tuple of an edge subject/object modifier (utils.py:222-291)."""
+    """Canonical tuple of an edge subject/object modifier (utils.py:222-291).
+    Tuples, not lists, so it can sit in a hashable edge identity; JSON
+    renders both the same."""
     if not modifier:
         return None
     kind = modifier.get('modifier')
@@ -133,26 +126,26 @@ def _canonicalize_modifier(modifier):
     result = []
     if kind == ACTIVITY:
         if effect:
-            result.append([ACTIVITY, effect.get('namespace'),
-                           effect.get('identifier'), effect.get('name')])
+            result.append((ACTIVITY, effect.get('namespace'),
+                           effect.get('identifier'), effect.get('name')))
         else:
-            result.append([ACTIVITY])
+            result.append((ACTIVITY,))
     elif kind == DEGRADATION:
-        result.append([DEGRADATION])
+        result.append((DEGRADATION,))
     elif kind == TRANSLOCATION:
         if effect:
             fl, tl = effect['from_loc'], effect['to_loc']
-            result.append([
+            result.append((
                 TRANSLOCATION,
                 fl.get('namespace'), fl.get('identifier'), fl.get('name'),
                 tl.get('namespace'), tl.get('identifier'), tl.get('name'),
-            ])
+            ))
         else:
-            result.append([TRANSLOCATION])
+            result.append((TRANSLOCATION,))
     if location:
-        result.append(['location', location.get('namespace'),
-                       location.get('identifier'), location.get('name')])
-    return result or None
+        result.append(('location', location.get('namespace'),
+                       location.get('identifier'), location.get('name')))
+    return tuple(result) or None
 
 
 def _term_modifier(term):
@@ -213,11 +206,26 @@ class DocumentCompiler:
     def compile(self, lines):
         """Compile raw lines → dict of row lists (nodes, edges, warnings,
         metadata)."""
+        return self._compiled(lines).result()
+
+    def compile_triples(self, lines):
+        """The ``(subject, predicate, object)`` triples of one document:
+        the triple columns of ``compile(lines)['edges']``, same order and
+        multiplicity, without building a node or edge row."""
+        return self._compiled(lines).triples()
+
+    def _compiled(self, lines):
+        """The compile state of one document after its last line. A page
+        with no BEL line at all (prose only) is no BEL document: its state
+        is empty, without the missing-metadata warnings of a header-less
+        BEL document."""
         sanitized = sanitize_lines(lines)
+        if not sanitized:
+            return _CompileState(self)
         documents, definitions, statements = split_sections(sanitized)
         state = self._header_state(documents, definitions)
         state.parse_statements(statements)
-        return state.result()
+        return state
 
     def _header_state(self, documents, definitions):
         """A fresh compile state with the header applied: metadata,
@@ -323,10 +331,7 @@ class DocumentCompiler:
         state.term_parser, state.control = prepared
         # the line number reaches only warnings and edge rows, not triples
         state.parse_statements([(1, statement)])
-        return [(e['triple_subject'], e['triple_predicate'],
-                 e['triple_object'])
-                for e in state.edges.values()
-                if e['triple_subject'] is not None]
+        return state.triples()
 
 
 class _CompileState:
@@ -339,11 +344,10 @@ class _CompileState:
         self.annotation_patterns = {}
         self.annotation_locals = {}
         self.warnings = []
-        self.nodes = {}                # bel -> node row
-        self.edges = {}                # edge_key -> edge row
+        self.nodes = {}                # bel -> node dict
+        self.edges = {}                # edge identity -> edge record
         self.term_parser = None
         self.control = None
-        self._node_cache = {}          # bel -> node dict
 
     # ---------------- header ----------------
 
@@ -560,33 +564,7 @@ class _CompileState:
         bel = model.node_as_bel(node)
         if bel in self.nodes:
             return bel
-        row_cache = self.config._node_row_cache
-        row = row_cache.get(bel)
-        if row is None:
-            variants = node.get('variants') or []
-            concept = node.get('concept') or {}
-            row = {
-                'node_bel': bel,
-                'node_id': model.node_md5(node),
-                'function': node['function'],
-                'namespace': concept.get('namespace'),
-                'name': concept.get('name'),
-                'identifier': concept.get('identifier'),
-                'variant_kinds': sorted({v['kind'] for v in variants}) or None,
-                'n_members': len(node['members'])
-                if node.get('members') is not None else None,
-                'n_reactants': len(node['reactants'])
-                if node.get('reactants') else None,
-                'n_products': len(node['products'])
-                if node.get('products') else None,
-                'has_fusion': bool(node.get('fusion')),
-                'node_json': json.dumps(node, sort_keys=True,
-                                        separators=(',', ':')),
-            }
-            if len(row_cache) < 65536:  # bound executor memory
-                row_cache[bel] = row
-        self.nodes[bel] = row
-        self._node_cache_put(bel, node)
+        self.nodes[bel] = node
 
         if node.get('variants'):
             parent = model.get_parent(node)
@@ -605,53 +583,35 @@ class _CompileState:
                 self.add_unqualified_edge(bel, p_bel, HAS_PRODUCT, None)
         return bel
 
-    def _node_cache_put(self, bel, node):
-        self._node_cache[bel] = node
-
-    def _node_of(self, bel):
-        return self._node_cache[bel]
-
     def add_unqualified_edge(self, u_bel, v_bel, relation, line):
         self.add_edge_row(
             source=u_bel, target=v_bel, relation=relation,
             citation_db=None, citation_id=None, evidence=None,
             annotations=None, subject_modifier=None, object_modifier=None,
             line=line,
-            source_node=self._node_of(u_bel), target_node=self._node_of(v_bel),
+            source_node=self.nodes[u_bel], target_node=self.nodes[v_bel],
         )
 
     def add_edge_row(self, *, source, target, relation, citation_db,
                      citation_id, evidence, annotations, subject_modifier,
                      object_modifier, line, source_node, target_node):
-        key = edge_key(source, target, citation_db, citation_id, evidence,
-                       relation, subject_modifier, object_modifier)
+        """Record one edge; first writer wins. The identity holds the
+        components of the edge id in the order :func:`_edge_id` hashes
+        them, so the row is built from the record only when
+        :meth:`result` asks for it."""
+        key = (source, target,
+               None if citation_db is None
+               else '{}:{}'.format(citation_db, citation_id),
+               evidence,
+               _canonicalize_modifier(subject_modifier),
+               _canonicalize_modifier(object_modifier),
+               relation)
         if key in self.edges:
             return
-        triple = edge_to_triple(source_node, target_node, relation, object_modifier)
-        self.edges[key] = {
-            'edge_id': key,
-            'source_bel': source,
-            'source_id': self.nodes[source]['node_id'],
-            'target_bel': target,
-            'target_id': self.nodes[target]['node_id'],
-            'relation': relation,
-            'citation_db': citation_db,
-            'citation_id': citation_id,
-            'evidence': evidence,
-            'annotations': annotations or None,
-            'subject_modifier': _json_or_none(subject_modifier),
-            'object_modifier': _json_or_none(object_modifier),
-            'subject_modifier_kind': (subject_modifier or {}).get('modifier'),
-            'object_modifier_kind': (object_modifier or {}).get('modifier'),
-            'line': line,
-            'triple_subject': triple[0] if triple else None,
-            'triple_predicate': triple[1] if triple else None,
-            'triple_object': triple[2] if triple else None,
-            # populated post-hoc by citations.enrich_pubmed_citations —
-            # the reference likewise only gets authors from enrichment
-            # (manager/citation_utils.py:137-244), never from parsing
-            'citation_authors': None,
-        }
+        self.edges[key] = (source, target, relation, citation_db,
+                           citation_id, evidence, annotations,
+                           subject_modifier, object_modifier, line,
+                           source_node, target_node)
 
     # ---------------- output ----------------
 
@@ -677,11 +637,84 @@ class _CompileState:
             }
         self.warnings.append(self._warning_row(exc, context))
 
+    def triples(self):
+        """One ``(subject, predicate, object)`` per edge record that has a
+        triple, in insertion order."""
+        out = []
+        for (_, _, relation, _, _, _, _, _, object_modifier, _,
+             source_node, target_node) in self.edges.values():
+            triple = edge_to_triple(source_node, target_node, relation,
+                                    object_modifier)
+            if triple:
+                out.append(triple)
+        return out
+
+    def _node_row(self, bel, node):
+        """The node row of ``bel``, through the compiler's row cache."""
+        row_cache = self.config._node_row_cache
+        row = row_cache.get(bel)
+        if row is None:
+            variants = node.get('variants') or []
+            concept = node.get('concept') or {}
+            row = {
+                'node_bel': bel,
+                'node_id': hashlib.md5(bel.encode('utf8')).hexdigest(),  # noqa: S324
+                'function': node['function'],
+                'namespace': concept.get('namespace'),
+                'name': concept.get('name'),
+                'identifier': concept.get('identifier'),
+                'variant_kinds': sorted({v['kind'] for v in variants}) or None,
+                'n_members': len(node['members'])
+                if node.get('members') is not None else None,
+                'n_reactants': len(node['reactants'])
+                if node.get('reactants') else None,
+                'n_products': len(node['products'])
+                if node.get('products') else None,
+                'has_fusion': bool(node.get('fusion')),
+                'node_json': json.dumps(node, sort_keys=True,
+                                        separators=(',', ':')),
+            }
+            if len(row_cache) < 65536:  # bound executor memory
+                row_cache[bel] = row
+        return row
+
     def result(self):
+        nodes = {bel: self._node_row(bel, node)
+                 for bel, node in self.nodes.items()}
+        edges = []
+        for key, (source, target, relation, citation_db, citation_id,
+                  evidence, annotations, subject_modifier, object_modifier,
+                  line, source_node, target_node) in self.edges.items():
+            triple = edge_to_triple(source_node, target_node, relation,
+                                    object_modifier)
+            edges.append({
+                'edge_id': _edge_id(key),
+                'source_bel': source,
+                'source_id': nodes[source]['node_id'],
+                'target_bel': target,
+                'target_id': nodes[target]['node_id'],
+                'relation': relation,
+                'citation_db': citation_db,
+                'citation_id': citation_id,
+                'evidence': evidence,
+                'annotations': annotations or None,
+                'subject_modifier': _json_or_none(subject_modifier),
+                'object_modifier': _json_or_none(object_modifier),
+                'subject_modifier_kind': (subject_modifier or {}).get('modifier'),
+                'object_modifier_kind': (object_modifier or {}).get('modifier'),
+                'line': line,
+                'triple_subject': triple[0] if triple else None,
+                'triple_predicate': triple[1] if triple else None,
+                'triple_object': triple[2] if triple else None,
+                # populated post-hoc by citations.enrich_pubmed_citations —
+                # the reference likewise only gets authors from enrichment
+                # (manager/citation_utils.py:137-244), never from parsing
+                'citation_authors': None,
+            })
         return {
             'metadata': self.metadata,
-            'nodes': list(self.nodes.values()),
-            'edges': list(self.edges.values()),
+            'nodes': list(nodes.values()),
+            'edges': edges,
             'warnings': self.warnings,
         }
 

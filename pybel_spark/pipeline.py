@@ -95,14 +95,15 @@ def make_parse_func(catalog, compiler_options=None, spark=None):
 
 
 def extract_triples(documents: DataFrame, catalog=None,
-                    compiler_options=None, distinct=True) -> DataFrame:
-    """Fast path for the north-star output: documents → (subject, predicate,
-    object) triples only.
+                    compiler_options=None) -> DataFrame:
+    """Fast path for the north-star output: documents → distinct (subject,
+    predicate, object) triples only.
 
-    Same compile as build_graph, but the UDF ships just three string columns
-    back through Arrow instead of the full nested node/edge/warning rows —
-    an order of magnitude less serialization and shuffle input for the most
-    common job.
+    Each page runs :meth:`DocumentCompiler.compile_triples`: the compile
+    loop of build_graph, which reads each edge record's triple and builds
+    no node or edge row (no canonical JSON, no md5 ids). The UDF ships
+    just three string columns back through Arrow instead of the full
+    nested node/edge/warning rows.
     """
     import pandas as pd
 
@@ -116,23 +117,17 @@ def extract_triples(documents: DataFrame, catalog=None,
     def parse(batches):
         compiler = DocumentCompiler(resources=catalog_bc.value, **options)
         for pdf in batches:
-            subjects, predicates, objects = [], [], []
+            triples = []
             for _, lines in masked_pages(pdf):
-                result = compiler.compile(lines)
-                for e in result['edges']:
-                    if e['triple_subject'] is not None:
-                        subjects.append(e['triple_subject'])
-                        predicates.append(e['triple_predicate'])
-                        objects.append(e['triple_object'])
-            yield pd.DataFrame({
-                'subject': subjects, 'predicate': predicates, 'object': objects})
+                triples.extend(compiler.compile_triples(lines))
+            yield pd.DataFrame(triples,
+                               columns=['subject', 'predicate', 'object'])
 
     # explicit projection: Catalyst can't prune columns through mapInPandas,
     # so drop url/warc_ts/lang before the UDF → the parquet scan reads only
     # (html, text)
-    triples = documents.select('html', 'text') \
-        .mapInPandas(parse, schema=TRIPLES_SCHEMA)
-    return triples.distinct() if distinct else triples
+    return documents.select('html', 'text') \
+        .mapInPandas(parse, schema=TRIPLES_SCHEMA).distinct()
 
 
 def statement_keys(documents: DataFrame, catalog=None, compiler_options=None,

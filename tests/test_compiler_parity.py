@@ -3,6 +3,7 @@
 The golden files were generated by running the actual reference compiler
 (fixtures/gen_golden.py) over its own test corpus.
 """
+import hashlib
 import importlib.util
 import json
 import os
@@ -11,6 +12,7 @@ import pytest
 
 from pybel_spark.bel.compiler import DocumentCompiler
 from pybel_spark.corpus import load_corpus_catalog
+from pybel_spark.pipeline import mask_non_bel_lines
 from pybel_spark.resources import reference_catalog
 
 from .conftest import BEL_DIR, REPO, load_golden, load_pool, requires_reference
@@ -113,6 +115,63 @@ def test_pool_units():
         if got_triples != exp_triples or got_nodes != exp_nodes or got_warn != exp_warn:
             failures.append((unit['id'], unit['lines'][-1]))
     assert not failures, 'units failed: {}'.format(failures)
+
+
+def test_pool_unit_node_ids():
+    """Every node id of a pool unit is the reference's md5 of that node."""
+    pool = load_pool()
+    compiler = DocumentCompiler(resources=load_corpus_catalog())
+    for unit in pool['units']:
+        expected = {r['bel']: r['md5'] for r in unit['golden']['nodes']}
+        result = compiler.compile(pool['header'] + unit['lines'])
+        for row in result['nodes']:
+            assert row['node_id'] == expected[row['node_bel']], unit['id']
+
+
+#: sha256 of every pool unit's compile() output, frozen from the compiler
+#: that built node and edge rows eagerly; see test_pool_units_result_digest
+POOL_RESULT_SHA256 = \
+    '7e134fdbdf1567a93044cecc30f18e384b4a027f7c096fe1dc4b70cc00877a8b'
+
+
+def test_pool_units_result_digest():
+    """The metadata and every node, edge and warning row of every pool
+    unit, with their ids, column order and row order, hash to the frozen
+    digest: the rows stay bit-identical whatever the compile loop
+    records on the way."""
+    pool = load_pool()
+    digest = hashlib.sha256()
+    compiler = DocumentCompiler(resources=load_corpus_catalog())
+    for unit in pool['units']:
+        result = compiler.compile(pool['header'] + unit['lines'])
+        rows = [sorted(result['metadata'].items())] + [
+            [kind, [list(row.items()) for row in result[kind]]]
+            for kind in ('nodes', 'edges', 'warnings')]
+        digest.update(json.dumps(rows, separators=(',', ':')).encode('utf8'))
+    assert digest.hexdigest() == POOL_RESULT_SHA256
+
+
+def test_prose_only_page_is_empty():
+    """A page without a single BEL line is no BEL document: no metadata
+    warnings, no rows."""
+    compiler = DocumentCompiler(resources=load_corpus_catalog())
+    lines = mask_non_bel_lines('Just some prose.\n\nAnd more of it.')
+    assert compiler.compile(lines) == {
+        'metadata': {}, 'nodes': [], 'edges': [], 'warnings': []}
+    assert compiler.compile_triples(lines) == []
+
+
+def test_headerless_bel_page_warns_missing_metadata():
+    """A page with BEL lines but no SET DOCUMENT header still gets one
+    MissingMetadataException per required metadata key, as in the
+    reference."""
+    compiler = DocumentCompiler(resources=load_corpus_catalog())
+    result = compiler.compile(mask_non_bel_lines(
+        'Prose.\nSET Citation = {"PubMed", "1"}\n'
+        'SET Evidence = "e"\np(HGNC:AKT1) increases p(HGNC:EGFR)'))
+    missing = [w for w in result['warnings']
+               if w['error_class'] == 'MissingMetadataException']
+    assert len(missing) == 5
 
 
 @requires_reference

@@ -208,8 +208,8 @@ def test_malformed_web_inputs_survive(spark):
 def test_all_none_page_is_the_empty_page(spark):
     """A page whose html and text are both None is the empty page in all
     three parse UDFs: the full parse keeps its one metrics row (lineage
-    counts documents), and the triple and statement-key paths emit
-    nothing for it."""
+    counts documents) with no warning, and the triple and statement-key
+    paths emit nothing for it."""
     import hashlib
 
     import pandas as pd
@@ -228,12 +228,13 @@ def test_all_none_page_is_the_empty_page(spark):
     none = rows.set_index('url').loc['u/none']
     assert (none['n_lines'], none['n_statements']) == (1, 0)
     assert none['text_sha256'] == hashlib.sha256(b'').hexdigest()
-    assert len(none['nodes']) == len(none['edges']) == 0
+    assert len(none['nodes']) == len(none['edges']) \
+        == len(none['warnings']) == 0
 
     docs = spark.createDataFrame(
         [('u/none', None, None, None, 'en')], DOCUMENTS_SCHEMA)
-    assert [r['n_statements'] for r in
-            build_graph(docs).doc_metrics.collect()] == [0]
+    assert [(r['n_statements'], r['n_warnings']) for r in
+            build_graph(docs).doc_metrics.collect()] == [(0, 0)]
     assert extract_triples(docs).count() == 0
     assert statement_keys(docs).count() == 0
 

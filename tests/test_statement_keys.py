@@ -5,7 +5,9 @@ triples as compiling the whole one-statement document the key stands for
 qualified, then the statement), and must never change the prepared state
 that later keys of the same header share. Stages 1 and 3 together: the
 triples of a page's statement keys must be the triples of compiling the
-page, under the same compiler options."""
+page, under the same compiler options. The triples path of a whole
+page (``compile_triples``) must be the triple columns of its edge
+rows."""
 import copy
 import json
 import os
@@ -17,6 +19,8 @@ from pybel_spark.bel.compiler import (DocumentCompiler, sanitize_lines,
                                       split_sections, statement_key_header)
 from pybel_spark.bel.control import is_control_line
 from pybel_spark.corpus import load_corpus_catalog
+
+from .test_grammar_cases import CONTEXT as GRAMMAR_CONTEXT
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 FIXTURES = os.path.join(os.path.dirname(HERE), 'fixtures')
@@ -171,9 +175,13 @@ def _pages():
 PAGES = _pages()
 
 
+def _edge_triples(edges):
+    return [(e['triple_subject'], e['triple_predicate'], e['triple_object'])
+            for e in edges if e['triple_subject'] is not None]
+
+
 def _triples(edges):
-    return {(e['triple_subject'], e['triple_predicate'], e['triple_object'])
-            for e in edges if e['triple_subject'] is not None}
+    return set(_edge_triples(edges))
 
 
 def _dedup_parse_triples(options):
@@ -204,3 +212,36 @@ def test_dedup_parse_equals_compile(options):
         union = set().union(*(whole for _, whole in per_page))
         default = set().union(*(w for _, w in _dedup_parse_triples({})))
         assert union < default
+
+
+@pytest.mark.parametrize('options', [
+    {}, {'required_annotations': ['Species']}, {'citation_clearing': False}],
+    ids=['default', 'required_species', 'no_citation_clearing'])
+def test_compile_triples_equal_edge_rows(options):
+    """``compile_triples`` reads the triples off the edge records that
+    ``compile`` turns into rows: same list, order and multiplicity, on
+    every pool unit, every grammar case under its header and context,
+    and every seeded SET/UNSET page."""
+    rows, triples = (
+        DocumentCompiler(resources=load_corpus_catalog(), **options)
+        for _ in range(2))
+    # one statement under three contexts, then once more under the last:
+    # three edges with the same triple, and a duplicate edge
+    statement = 'p(HGNC:AKT1) increases p(HGNC:EGFR)'
+    repeated = ANNOTATED_HEADER + [
+        'SET Citation = {"PubMed", "j", "100"}', 'SET Evidence = "e1"',
+        statement, 'SET Evidence = "e2"', statement,
+        'SET Citation = {"PubMed", "j", "200"}', 'SET Evidence = "e2"',
+        statement, statement]
+    pages = PAGES + [repeated] + [
+        ANNOTATED_HEADER + GRAMMAR_CONTEXT + [case['statement']]
+        for case in GRAMMAR_CASES]
+    n_triples = 0
+    for page in pages:
+        want = _edge_triples(rows.compile(page)['edges'])
+        assert triples.compile_triples(page) == want, page
+        n_triples += len(want)
+    assert n_triples
+    if not options.get('required_annotations'):
+        assert triples.compile_triples(repeated) == \
+            [('HGNC:AKT1', 'increasesAmountOf', 'HGNC:EGFR')] * 3
