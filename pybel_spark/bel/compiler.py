@@ -157,6 +157,19 @@ def _term_modifier(term):
     return None
 
 
+def _warning_row(exc, context):
+    extras = getattr(exc, 'extras', None)
+    return {
+        'line_number': exc.line_number,
+        'line': exc.line,
+        'position': getattr(exc, 'position', 0),
+        'error_class': exc.__class__.__name__,
+        'detail': json.dumps(list(extras), default=str) if extras else None,
+        'context': json.dumps(context, sort_keys=True, default=sorted)
+        if context else None,
+    }
+
+
 def _apply_control_line(control, number, line):
     """Apply one ``SET``/``UNSET`` line to ``control``. A malformed line
     raises at its failure point, keeping the mutations made before it."""
@@ -193,15 +206,13 @@ class DocumentCompiler:
         self.required_annotations = required_annotations
         self.skip_validation = skip_validation
         # web corpora repeat boilerplate headers across millions of pages —
-        # memoize parsed (metadata, definitions, term parser) per distinct
-        # header so each executor pays the definition cost once per header
-        self._header_cache = {}
+        # one parsed header per distinct header text, shared by the page
+        # compile and both stages of the dedup parse, so each executor pays
+        # the definition cost once per header
+        self._headers = {}
         # node rows (md5 + flat columns + canonical JSON) are pure functions
         # of the canonical BEL string — share them across documents
         self._node_row_cache = {}
-        # statement keys: (term parser, prepared control state) per
-        # (header md5, qualified), so a key parse skips the header entirely
-        self._key_state_cache = {}
 
     def compile(self, lines):
         """Compile raw lines → dict of row lists (nodes, edges, warnings,
@@ -214,61 +225,50 @@ class DocumentCompiler:
         multiplicity, without building a node or edge row."""
         return self._compiled(lines).triples()
 
+    def _header(self, text):
+        """The parsed header of ``text``: the sanitized ``SET DOCUMENT``
+        and ``DEFINE`` lines of a page, joined by newlines."""
+        header = self._headers.get(text)
+        if header is None:
+            header = _Header(self, text)
+            if len(self._headers) < 256:  # bound executor memory
+                self._headers[text] = header
+        return header
+
+    def _split_page(self, lines):
+        """``(header, header line numbers, statements)`` of one page: its
+        parsed header, the page line of each header line, and its
+        statement and control lines."""
+        documents, definitions, statements = split_sections(
+            sanitize_lines(lines))
+        header_lines = documents + definitions
+        header = self._header('\n'.join(line for _, line in header_lines))
+        return header, [number for number, _ in header_lines], statements
+
     def _compiled(self, lines):
         """The compile state of one document after its last line. A page
         with no BEL line at all (prose only) is no BEL document: its state
         is empty, without the missing-metadata warnings of a header-less
         BEL document."""
-        sanitized = sanitize_lines(lines)
-        if not sanitized:
-            return _CompileState(self)
-        documents, definitions, statements = split_sections(sanitized)
-        state = self._header_state(documents, definitions)
-        state.parse_statements(statements)
-        return state
-
-    def _header_state(self, documents, definitions):
-        """A fresh compile state with the header applied: metadata,
-        definitions and term parser come from the per-header cache, the
-        control state is new."""
-        key = (tuple(line for _, line in documents),
-               tuple(line for _, line in definitions))
-        cached = self._header_cache.get(key)
-        if cached is None:
-            state = _CompileState(self)
-            state.parse_document_section(documents)
-            state.parse_definitions(definitions)
-            state.make_parsers()
-            if len(self._header_cache) < 256:  # bound executor memory
-                self._header_cache[key] = (
-                    state.metadata, state.namespaces,
-                    state.namespace_patterns, state.annotation_terms,
-                    state.annotation_patterns, state.annotation_locals,
-                    list(state.warnings), state.term_parser)
-            return state
-
-        state = _CompileState(self)
-        (state.metadata, state.namespaces, state.namespace_patterns,
-         state.annotation_terms, state.annotation_patterns,
-         state.annotation_locals, header_warnings, state.term_parser) = cached
-        state.warnings = list(header_warnings)
-        state.make_control()
+        header, numbers, statements = self._split_page(lines)
+        state = _CompileState(header, header.control())
+        if numbers or statements:
+            state.warnings = header.page_warnings(numbers)
+            state.parse_statements(statements)
         return state
 
     def statement_keys(self, lines):
         """Statement keys of one masked page — stage 1 of
         :func:`pybel_spark.pipeline.extract_triples_deduped`: one
         ``(header, statement, qualified)`` per statement line, in page
-        order, from the header state and control-line code that
+        order, from the parsed header and control-line code that
         :meth:`compile` runs. ``qualified`` means that at that line a
         citation and an evidence were set and no required annotation was
         missing — the guards of a qualified relation, which
         :meth:`statement_key_triples` replaces by a placeholder context.
         """
-        documents, definitions, statements = split_sections(
-            sanitize_lines(lines))
-        header = statement_key_header(documents, definitions)
-        control = self._header_state(documents, definitions).control
+        header, _, statements = self._split_page(lines)
+        control = header.control()
         keys = []
         for number, line in statements:
             if is_control_line(line):
@@ -283,7 +283,7 @@ class DocumentCompiler:
                     # equality with compile() is fuzzed in tests.
                     pass
                 continue
-            keys.append((header, line, bool(
+            keys.append((header.key, line, bool(
                 control.citation_is_set and control.evidence
                 and not control.get_missing_required_annotations())))
         return keys
@@ -296,46 +296,33 @@ class DocumentCompiler:
         ``statement`` one sanitized statement line, and ``qualified``
         the flag :meth:`statement_keys` gave it in its document.
 
-        The header definitions and the control state are prepared once
-        per ``(header md5, qualified)``: a qualified key is parsed under a
-        placeholder citation and evidence, an unqualified one under an
-        empty control state, so qualified relations raise exactly as they
-        did in the document while structural triples still emit. The
-        flag already includes ``required_annotations``, so the prepared
-        control state requires none. It is shared by every key of that
-        header and is never mutated; a control line would mutate it, so
-        it is rejected. Returns a list of ``(subject, predicate,
-        object)``.
+        The key is parsed under its header's shared
+        :meth:`_Header.key_control`: a qualified key under a placeholder
+        citation and evidence, an unqualified one under an empty control
+        state, so qualified relations raise exactly as they did in the
+        document while structural triples still emit. That control state
+        is never mutated; a control line would mutate it, so it is
+        rejected. Returns a list of ``(subject, predicate, object)``.
         """
         if is_control_line(statement):
             raise ValueError(
                 'a statement key cannot be a control line: {!r}'
                 .format(statement))
-        header_md5, _, header_text = header.partition('\n')
-        cache_key = (header_md5, qualified)
-        prepared = self._key_state_cache.get(cache_key)
-        if prepared is None:
-            header_lines = header_text.split('\n') if header_text else []
-            documents, definitions, _ = split_sections(
-                enumerate(header_lines, start=1))
-            header_state = self._header_state(documents, definitions)
-            control = header_state.control
-            control.required_annotations = []
-            if qualified:
-                control.citation_db, control.citation_db_id = 'PubMed', '1'
-                control.evidence = '-'
-            prepared = (header_state.term_parser, control)
-            if len(self._key_state_cache) < 256:  # bound executor memory
-                self._key_state_cache[cache_key] = prepared
-        state = _CompileState(self)
-        state.term_parser, state.control = prepared
+        parsed = self._header(header.partition('\n')[2])
+        state = _CompileState(parsed, parsed.key_control(qualified))
         # the line number reaches only warnings and edge rows, not triples
         state.parse_statements([(1, statement)])
         return state.triples()
 
 
-class _CompileState:
-    def __init__(self, config: DocumentCompiler):
+class _Header:
+    """One parsed header: metadata, definitions, warnings, term parser and
+    statement memo of a header text, whose lines are numbered from 1. It
+    depends on the text alone, so every page and statement key with that
+    text shares it; a page restamps the warnings with its own line
+    numbers (:meth:`page_warnings`)."""
+
+    def __init__(self, config: DocumentCompiler, text):
         self.config = config
         self.metadata = {}
         self.namespaces = {}           # keyword -> {name: encoding}
@@ -344,12 +331,22 @@ class _CompileState:
         self.annotation_patterns = {}
         self.annotation_locals = {}
         self.warnings = []
-        self.nodes = {}                # bel -> node dict
-        self.edges = {}                # edge identity -> edge record
-        self.term_parser = None
-        self.control = None
-
-    # ---------------- header ----------------
+        documents, definitions, _ = split_sections(
+            enumerate(text.split('\n') if text else [], start=1))
+        #: the header column of this header's statement keys
+        self.key = statement_key_header(documents, definitions)
+        self.parse_document_section(documents)
+        self.parse_definitions(definitions)
+        self.term_parser = BELTermParser(
+            namespaces=self.namespaces,
+            namespace_patterns=self.namespace_patterns,
+            allow_naked_names=config.allow_naked_names,
+            skip_validation=config.skip_validation,
+            disallow_nested=config.disallow_nested,
+            disallow_unqualified_translocations=config.disallow_unqualified_translocations,
+        )
+        self._statements = {}          # line -> parse outcome
+        self._key_controls = {}        # qualified -> shared control state
 
     def parse_document_section(self, documents):
         for number, line in documents:
@@ -372,7 +369,7 @@ class _CompileState:
         for required in REQUIRED_METADATA:
             if required not in self.metadata:
                 exc = MissingMetadataException(None, None, 0, required)
-                self.warnings.insert(0, self._warning_row(exc, {}))
+                self.warnings.insert(0, _warning_row(exc, None))
 
     def parse_definitions(self, definitions):
         for number, line in definitions:
@@ -412,27 +409,74 @@ class _CompileState:
                 values = re.findall(r'"((?:[^"\\]|\\.)*)"', rest)
                 self.annotation_locals[keyword] = set(values)
 
-    def make_parsers(self):
-        # the term parser is stateless after construction → cacheable per
-        # header; ControlState is per-document (SET/UNSET state) → always fresh
-        self.term_parser = BELTermParser(
-            namespaces=self.namespaces,
-            namespace_patterns=self.namespace_patterns,
-            allow_naked_names=self.config.allow_naked_names,
-            skip_validation=self.config.skip_validation,
-            disallow_nested=self.config.disallow_nested,
-            disallow_unqualified_translocations=self.config.disallow_unqualified_translocations,
-        )
-        self.make_control()
+    def _warn(self, exc):
+        self.warnings.append(_warning_row(exc, None))
 
-    def make_control(self):
-        self.control = ControlState(
+    def page_warnings(self, numbers):
+        """The header warnings of a page whose header line ``i`` is page
+        line ``numbers[i - 1]``. Rows without a line number (missing
+        metadata) stay at ``None``."""
+        return [row if row['line_number'] is None
+                else dict(row, line_number=numbers[row['line_number'] - 1])
+                for row in self.warnings]
+
+    def control(self):
+        """A fresh control state for one page (SET/UNSET state)."""
+        return ControlState(
             annotation_to_term=self.annotation_terms,
             annotation_to_pattern=self.annotation_patterns,
             annotation_to_local=self.annotation_locals,
             citation_clearing=self.config.citation_clearing,
             required_annotations=self.config.required_annotations,
         )
+
+    def key_control(self, qualified):
+        """The control state shared by every statement key of this header
+        with this ``qualified`` flag: a placeholder citation and evidence
+        when qualified, none otherwise. The flag already includes
+        ``required_annotations``, so it requires none. Never mutated."""
+        control = self._key_controls.get(qualified)
+        if control is None:
+            control = self._key_controls[qualified] = self.control()
+            control.required_annotations = []
+            if qualified:
+                control.citation_db, control.citation_db_id = 'PubMed', '1'
+                control.evidence = '-'
+        return control
+
+    def parse_statement(self, number, line):
+        """The parse of statement ``line`` at page line ``number``.
+
+        Web corpora repeat statements (boilerplate/syndication) massively,
+        and a parse outcome — the result dict (never mutated downstream;
+        all node construction is copy-on-build in bel.model) or the raised
+        warning — is a pure function of (header, line), so it is memoized
+        here. A replayed warning is re-stamped with ``number``."""
+        entry = self._statements.get(line)
+        if entry is None:
+            try:
+                entry = ('ok', self.term_parser.parse_statement(line, number))
+            except BELParserWarning as exc:
+                entry = ('err', exc)
+            if len(self._statements) < 65536:  # bound executor memory
+                self._statements[line] = entry
+        if entry[0] == 'err':
+            exc = entry[1]
+            exc.line_number = number
+            raise exc
+        return entry[1]
+
+
+class _CompileState:
+    """The per-page state of one compile under a shared :class:`_Header`:
+    the control state, the node and edge records, and the warnings."""
+
+    def __init__(self, header: _Header, control):
+        self.header = header
+        self.control = control
+        self.warnings = []
+        self.nodes = {}                # bel -> node dict
+        self.edges = {}                # edge identity -> edge record
 
     # ---------------- statements ----------------
 
@@ -450,30 +494,7 @@ class _CompileState:
             _apply_control_line(self.control, number, line)
             return
 
-        # per-header statement-parse memo: web corpora repeat statements
-        # (boilerplate/syndication) massively, and a parse outcome — the
-        # result dict (never mutated downstream; all node construction is
-        # copy-on-build in bel.model) or the raised warning — is a pure
-        # function of (definition header, line). The cache lives on the
-        # term_parser, which the header cache already shares across
-        # documents on an executor. Warning replays re-stamp the current
-        # occurrence's line number.
-        cache = getattr(self.term_parser, '_stmt_cache', None)
-        if cache is None:
-            cache = self.term_parser._stmt_cache = {}
-        entry = cache.get(line)
-        if entry is None:
-            try:
-                entry = ('ok', self.term_parser.parse_statement(line, number))
-            except BELParserWarning as exc:
-                entry = ('err', exc)
-            if len(cache) < 65536:  # bound executor memory
-                cache[line] = entry
-        if entry[0] == 'err':
-            exc = entry[1]
-            exc.line_number = number
-            raise exc
-        stmt = entry[1]
+        stmt = self.header.parse_statement(number, line)
         kind = stmt['type']
 
         if kind == 'term':
@@ -615,27 +636,12 @@ class _CompileState:
 
     # ---------------- output ----------------
 
-    def _warning_row(self, exc, context):
-        extras = getattr(exc, 'extras', None)
-        return {
-            'line_number': exc.line_number,
-            'line': exc.line,
-            'position': getattr(exc, 'position', 0),
-            'error_class': exc.__class__.__name__,
-            'detail': json.dumps(list(extras), default=str) if extras else None,
-            'context': json.dumps(context, sort_keys=True, default=sorted)
-            if context else None,
-        }
-
     def _warn(self, exc):
-        context = {}
-        if self.control is not None:
-            context = {
-                'citation_db': self.control.citation_db,
-                'citation_id': self.control.citation_db_id,
-                'evidence': self.control.evidence,
-            }
-        self.warnings.append(self._warning_row(exc, context))
+        self.warnings.append(_warning_row(exc, {
+            'citation_db': self.control.citation_db,
+            'citation_id': self.control.citation_db_id,
+            'evidence': self.control.evidence,
+        }))
 
     def triples(self):
         """One ``(subject, predicate, object)`` per edge record that has a
@@ -651,7 +657,7 @@ class _CompileState:
 
     def _node_row(self, bel, node):
         """The node row of ``bel``, through the compiler's row cache."""
-        row_cache = self.config._node_row_cache
+        row_cache = self.header.config._node_row_cache
         row = row_cache.get(bel)
         if row is None:
             variants = node.get('variants') or []
@@ -712,7 +718,7 @@ class _CompileState:
                 'citation_authors': None,
             })
         return {
-            'metadata': self.metadata,
+            'metadata': self.header.metadata,
             'nodes': list(nodes.values()),
             'edges': edges,
             'warnings': self.warnings,

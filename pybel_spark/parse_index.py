@@ -36,10 +36,9 @@ Parse notes: the batch keys come from the same stage 1 as
 :func:`pybel_spark.pipeline.extract_triples_deduped`
 (:meth:`~pybel_spark.bel.compiler.DocumentCompiler.statement_keys`), and
 the novel keys are parsed by the same stage 3, both from the caller's
-compiler options unchanged. Each executor prepares the compile state
-once per (header md5, qualified flag) — the header definitions, the
-term parser and a placeholder or empty control state — and parses each
-key's one statement line against it. Before the parse the keys are
+compiler options unchanged. Each executor parses a header once and
+prepares one control state per (header, qualified flag) — a placeholder
+or empty one — and parses each key's one statement line against them. Before the parse the keys are
 repartitioned round-robin over ``defaultParallelism`` partitions:
 AQE sizes partitions by bytes and would put the short keys of a whole
 batch into one partition, while the parse costs CPU per row, so without
@@ -76,8 +75,8 @@ import json
 
 from pyspark.sql import DataFrame, functions as F
 
-from .pipeline import (_parse_statement_keys, load_corpus_catalog,
-                       statement_keys)
+from .pipeline import (_parse_statement_keys, _statement_keys,
+                       load_corpus_catalog, statement_keys)
 from .textops.sidecar import (read_json_sidecar, sidecar_exists,
                               write_json_sidecar)
 
@@ -141,8 +140,7 @@ def parse_index_write(documents: DataFrame, path: str, catalog=None,
         catalog = load_corpus_catalog()
     catalog_bc = spark.sparkContext.broadcast(catalog)
     keys = _with_key_hash(
-        statement_keys(documents, catalog, compiler_options,
-                       _catalog_bc=catalog_bc)).persist()
+        _statement_keys(documents, catalog_bc, compiler_options)).persist()
     try:
         n = keys.count()
         _parse_and_write(keys, path, catalog_bc, compiler_options,
@@ -170,8 +168,7 @@ def parse_index_update(documents: DataFrame, path: str, catalog=None,
         catalog = load_corpus_catalog()
     catalog_bc = spark.sparkContext.broadcast(catalog)
     keys = _with_key_hash(
-        statement_keys(documents, catalog, compiler_options,
-                       _catalog_bc=catalog_bc)).persist()
+        _statement_keys(documents, catalog_bc, compiler_options)).persist()
     try:
         n_batch = keys.count()
         known = spark.read.parquet(path + '/keys')

@@ -130,8 +130,8 @@ def extract_triples(documents: DataFrame, catalog=None,
         .mapInPandas(parse, schema=TRIPLES_SCHEMA).distinct()
 
 
-def statement_keys(documents: DataFrame, catalog=None, compiler_options=None,
-                   _catalog_bc=None) -> DataFrame:
+def statement_keys(documents: DataFrame, catalog=None,
+                   compiler_options=None) -> DataFrame:
     """Distinct (header, statement, qualified) statement keys of a corpus
     — stages 1+2 of the dedup-parse pipeline, exposed for the cross-batch
     parse index (:mod:`pybel_spark.parse_index`). Stage 1 is
@@ -141,12 +141,19 @@ def statement_keys(documents: DataFrame, catalog=None, compiler_options=None,
     the qualified flag, and only that flag, of the surrounding control
     state reaches the triple); the distinct shuffles short uniform
     strings only."""
+    if catalog is None:
+        catalog = load_corpus_catalog()
+    return _statement_keys(
+        documents, documents.sparkSession.sparkContext.broadcast(catalog),
+        compiler_options)
+
+
+def _statement_keys(documents: DataFrame, catalog_bc,
+                    compiler_options) -> DataFrame:
+    """:func:`statement_keys` against an already broadcast catalog, so a
+    caller that also runs stage 3 ships the catalog once."""
     import pandas as pd
 
-    if catalog is None and _catalog_bc is None:
-        catalog = load_corpus_catalog()
-    catalog_bc = _catalog_bc if _catalog_bc is not None else \
-        documents.sparkSession.sparkContext.broadcast(catalog)
     options = compiler_options or {}
 
     def split(batches):
@@ -243,16 +250,16 @@ def extract_triples_deduped(documents: DataFrame, catalog=None,
 
     stage 1 (cheap, map-only): :meth:`DocumentCompiler.statement_keys`
     splits each page into its header and statement lines and tags each
-    statement with its in-situ qualified flag. It runs the header state
+    statement with its in-situ qualified flag. It runs the parsed header
     and control-line code of :meth:`DocumentCompiler.compile` over the
     page, and both stages build their compiler from the caller's
     options unchanged;
     stage 2: shuffle-distinct on md5(header)+statement+flag (short
-    strings, uniform keys); stage 3: parse the survivors. Stage 3 prepares
-    the compile state once per (header md5, qualified flag) — the header
-    definitions and the term parser, plus a placeholder citation and
-    evidence for qualified keys or an empty control state for unqualified
-    ones (so qualified relations are rejected exactly as they were in
+    strings, uniform keys); stage 3: parse the survivors. Stage 3 parses
+    each header once — the header definitions and the term parser — and
+    prepares one control state per (header, qualified flag): a
+    placeholder citation and evidence for qualified keys or an empty
+    control state for unqualified ones (so qualified relations are rejected exactly as they were in
     situ) — and parses each key's one line against it
     (:meth:`DocumentCompiler.statement_key_triples`). Its input is
     repartitioned round-robin over ``defaultParallelism`` partitions:
@@ -268,10 +275,22 @@ def extract_triples_deduped(documents: DataFrame, catalog=None,
     if catalog is None:
         catalog = load_corpus_catalog()
     catalog_bc = documents.sparkSession.sparkContext.broadcast(catalog)
-    unique = statement_keys(documents, catalog, compiler_options,
-                            _catalog_bc=catalog_bc)
+    unique = _statement_keys(documents, catalog_bc, compiler_options)
     return _parse_statement_keys(unique, catalog_bc, compiler_options) \
         .distinct()
+
+
+def edge_triples(edges: DataFrame) -> DataFrame:
+    """Distinct (subject, predicate, object) of an edge table: the triple
+    columns of every edge that has a triple."""
+    return (
+        edges.select(
+            F.col('triple_subject').alias('subject'),
+            F.col('triple_predicate').alias('predicate'),
+            F.col('triple_object').alias('object'))
+        .where(F.col('subject').isNotNull())
+        .distinct()
+    )
 
 
 class GraphResult:
@@ -311,17 +330,8 @@ class GraphResult:
     @property
     def triples(self) -> DataFrame:
         """Distinct (subject, predicate, object) — the north-star output."""
-        return (
-            self.parsed
-            .select(F.explode('edges').alias('e'))
-            .select(
-                F.col('e.triple_subject').alias('subject'),
-                F.col('e.triple_predicate').alias('predicate'),
-                F.col('e.triple_object').alias('object'),
-            )
-            .where(F.col('subject').isNotNull())
-            .distinct()
-        )
+        return edge_triples(
+            self.parsed.select(F.explode('edges').alias('e')).select('e.*'))
 
     @property
     def doc_metrics(self) -> DataFrame:
@@ -533,22 +543,23 @@ class _OutputFS:
             self.delete_file(src)
         return ok
 
-    def has_part_files(self, *parts) -> bool:
+    def part_files(self, *parts):
+        """Names of the ``part-`` data files under ``parts``, recursively
+        (none when the directory does not exist)."""
         if not self.remote:
             import os
 
             for _root, _dirs, files in os.walk(self._full(*parts)):
-                if any(f.startswith('part-') for f in files):
-                    return True
-            return False
+                yield from (f for f in files if f.startswith('part-'))
+            return
         path = self._jpath(self._full(*parts))
         if not self._fs.exists(path):
-            return False
+            return
         it = self._fs.listFiles(path, True)
         while it.hasNext():
-            if it.next().getPath().getName().startswith('part-'):
-                return True
-        return False
+            name = it.next().getPath().getName()
+            if name.startswith('part-'):
+                yield name
 
     def list_dir(self, *parts) -> list:
         if not self.remote:
@@ -842,24 +853,19 @@ def _run_checkpointed_locked(spark, docs, fs, lease, n_buckets, catalog,
             df.write.mode('overwrite').parquet(path)
             # an all-duplicates unit writes zero part files; record that so
             # readers never scan a schema-less empty dir
-            tables[table] = fs.has_part_files(table, cid)
+            tables[table] = any(fs.part_files(table, cid))
 
         # per-bucket lineage metrics (≤ |group| small rows to the driver);
-        # left join so empty buckets still get a done row
-        group_df = spark.createDataFrame([(b,) for b in group], 'bucket int')
-        metric_rows = (
-            group_df.join(
-                parsed.groupBy('bucket').agg(
-                    F.count('*').alias('n_docs'),
-                    F.sum('n_statements').alias('n_statements'),
-                    F.sum(F.size('edges')).alias('n_edges'),
-                    F.sum(F.size('warnings')).alias('n_warnings'),
-                ),
-                on='bucket', how='left')
-            .fillna(0, subset=['n_docs', 'n_statements', 'n_edges',
-                               'n_warnings'])
-            .collect()
-        )
+        # a bucket without documents keeps its zeros, so it is still done
+        zeros = {'n_docs': 0, 'n_statements': 0, 'n_edges': 0,
+                 'n_warnings': 0}
+        metrics = {str(b): dict(zeros) for b in group}
+        for r in parsed.groupBy('bucket').agg(
+                F.count('*').alias('n_docs'),
+                F.sum('n_statements').alias('n_statements'),
+                F.sum(F.size('edges')).alias('n_edges'),
+                F.sum(F.size('warnings')).alias('n_warnings')).collect():
+            metrics[str(r['bucket'])] = {k: r[k] for k in zeros}
         parsed.unpersist()
 
         # publish: fencing check + atomic swap is the commit point
@@ -868,10 +874,7 @@ def _run_checkpointed_locked(spark, docs, fs, lease, n_buckets, catalog,
             'commit_id': cid,
             'buckets': group,
             'tables': tables,
-            'metrics': {str(r['bucket']): {
-                'n_docs': r['n_docs'], 'n_statements': r['n_statements'],
-                'n_edges': r['n_edges'], 'n_warnings': r['n_warnings'],
-            } for r in metric_rows},
+            'metrics': metrics,
         })
         _swap_manifest(fs, manifest)
         n_processed += len(group)
@@ -923,25 +926,7 @@ def _compact_output_locked(spark, fs, lease) -> dict:
         ','.join(old_cids).encode()).hexdigest()[:8]
 
     def n_part_files(table, cid):
-        return sum(1 for _ in _iter_part_files(fs, table, cid))
-
-    def _iter_part_files(fs_, table, cid):
-        # only used for stats; local walk or remote listFiles
-        if not fs_.remote:
-            import os
-
-            for _r, _d, files in os.walk(fs_._full(table, cid)):
-                for f in files:
-                    if f.startswith('part-'):
-                        yield f
-        else:
-            path = fs_._jpath(fs_._full(table, cid))
-            if fs_._fs.exists(path):
-                it = fs_._fs.listFiles(path, True)
-                while it.hasNext():
-                    name = it.next().getPath().getName()
-                    if name.startswith('part-'):
-                        yield name
+        return sum(1 for _ in fs.part_files(table, cid))
 
     stats = {}
     tables = {}
@@ -958,7 +943,7 @@ def _compact_output_locked(spark, fs, lease) -> dict:
             files_after = n_part_files(table, new_cid)
             stats[table] = {'files_before': files_before,
                             'files_after': files_after}
-        tables[table] = bool(paths) and fs.has_part_files(table, new_cid)
+        tables[table] = bool(paths) and any(fs.part_files(table, new_cid))
 
     merged_metrics = {}
     all_buckets = []
@@ -1006,19 +991,9 @@ def read_graph(spark, out_dir: str) -> dict:
             return empty(name)  # e.g. a warning-free corpus
         return spark.read.parquet(*paths)
 
-    nodes = table('nodes')
     edges = table('edges')
-    warnings = table('warnings')
-    triples = (
-        edges.select(
-            F.col('triple_subject').alias('subject'),
-            F.col('triple_predicate').alias('predicate'),
-            F.col('triple_object').alias('object'))
-        .where(F.col('subject').isNotNull())
-        .distinct()
-    )
-    return {'nodes': nodes, 'edges': edges, 'warnings': warnings,
-            'triples': triples}
+    return {'nodes': table('nodes'), 'edges': edges,
+            'warnings': table('warnings'), 'triples': edge_triples(edges)}
 
 
 def triples_delta(triples_a: DataFrame, triples_b: DataFrame) -> DataFrame:

@@ -19,7 +19,7 @@ import os
 from pyspark.sql import DataFrame, functions as F
 
 from .corpus import load_corpus_catalog
-from .pipeline import make_parse_func
+from .pipeline import edge_triples, make_parse_func
 from .schemas import DOCUMENTS_SCHEMA, PARSED_SCHEMA
 
 
@@ -242,15 +242,7 @@ def read_stream_output(spark, out_dir: str) -> dict:
     """Batch views over the streamed edge log with content-hash dedup."""
     edges = spark.read.parquet(os.path.join(out_dir, 'edges_log')) \
         .dropDuplicates(['edge_id'])
-    triples = (
-        edges.select(
-            F.col('triple_subject').alias('subject'),
-            F.col('triple_predicate').alias('predicate'),
-            F.col('triple_object').alias('object'))
-        .where(F.col('subject').isNotNull())
-        .distinct()
-    )
-    return {'edges': edges, 'triples': triples}
+    return {'edges': edges, 'triples': edge_triples(edges)}
 
 
 def start_dedup_stream(spark, input_dir: str, out_dir: str,

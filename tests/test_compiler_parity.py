@@ -151,6 +151,27 @@ def test_pool_units_result_digest():
     assert digest.hexdigest() == POOL_RESULT_SHA256
 
 
+def test_header_warnings_keep_each_pages_line_numbers():
+    """Pages that share one warning-bearing header, placed after 0, 5 and
+    9 blank lines, each report the header warnings at their own line
+    numbers, exactly as a fresh compiler would: the compiler parses the
+    header once, but the line numbers belong to the page."""
+    pool = load_pool()
+    bad_lines = ['SET DOCUMENT Bogus = "x"',
+                 'DEFINE NAMESPACE HGNC AS PATTERN "x"']
+    header = pool['header'] + bad_lines
+    shared = DocumentCompiler(resources=load_corpus_catalog())
+    for blank in (0, 5, 9):
+        lines = [''] * blank + header + pool['units'][0]['lines']
+        got = shared.compile(lines)['warnings']
+        fresh = DocumentCompiler(resources=load_corpus_catalog())
+        assert got == fresh.compile(lines)['warnings'], blank
+        assert sorted((w['line_number'], w['error_class']) for w in got
+                      if w['line'] in bad_lines) == [
+            (blank + 17, 'MalformedMetadataException'),
+            (blank + 18, 'RedefinedNamespaceError')], blank
+
+
 def test_prose_only_page_is_empty():
     """A page without a single BEL line is no BEL document: no metadata
     warnings, no rows."""

@@ -113,13 +113,21 @@ def test_key_triples_ignore_required_annotations(header_name,
     _check_key_triples(header_name, citation_clearing, ['Species'])
 
 
+def _key_controls(compiler):
+    """The prepared control states of every parsed header of
+    ``compiler``, by (header text, qualified)."""
+    return {(text, qualified): control
+            for text, header in compiler._headers.items()
+            for qualified, control in header._key_controls.items()}
+
+
 def test_key_parse_never_mutates_prepared_state():
     compiler = _compiler(True)
     header = header_key(ANNOTATED_HEADER)
     compiler.statement_key_triples(header, STATEMENTS[0], True)
     compiler.statement_key_triples(header, STATEMENTS[0], False)
-    prepared = {k: copy.deepcopy(v[1].__dict__)
-                for k, v in compiler._key_state_cache.items()}
+    prepared = {k: copy.deepcopy(v.__dict__)
+                for k, v in _key_controls(compiler).items()}
     assert len(prepared) == 2
 
     first = {(s, q): compiler.statement_key_triples(header, s, q)
@@ -128,7 +136,7 @@ def test_key_parse_never_mutates_prepared_state():
                          'SET TESTAN1 = "1"', 'UNSET SupportingText'):
         with pytest.raises(ValueError):
             compiler.statement_key_triples(header, control_line, True)
-    after = {k: v[1].__dict__ for k, v in compiler._key_state_cache.items()}
+    after = {k: v.__dict__ for k, v in _key_controls(compiler).items()}
     assert after == prepared
 
     # a fresh compiler walking the keys in reverse order sees the same
