@@ -33,6 +33,10 @@ _SET_DOC_RE = re.compile(
 _DEFINE_RE = re.compile(
     r'DEFINE\s+(NAMESPACE|ANNOTATION)\s+(\w+)\s+AS\s+(URL|PATTERN|LIST)\s+(.*)$')
 
+#: entries a compiler's statement memo, node-row cache and seen sets hold
+#: at most, to bound executor memory
+_CACHE_SIZE = 65536
+
 
 def sanitize_lines(lines):
     """Strip blank/comment lines, merge backslash continuations, drop //
@@ -213,11 +217,25 @@ class DocumentCompiler:
         # node rows (md5 + flat columns + canonical JSON) are pure functions
         # of the canonical BEL string — share them across documents
         self._node_row_cache = {}
+        # node identities (canonical BEL) and edge identities that
+        # compile_new has returned rows for
+        self._emitted = (set(), set())
 
     def compile(self, lines):
         """Compile raw lines → dict of row lists (nodes, edges, warnings,
         metadata)."""
         return self._compiled(lines).result()
+
+    def compile_new(self, lines):
+        """:meth:`compile` less the node and edge rows whose identity an
+        earlier ``compile_new`` call of this compiler has returned, plus
+        ``n_edges``, the document's edge count, repeated edges included.
+        The JSON and md5 of a repeated identity are never built. Each seen
+        set holds at most ``_CACHE_SIZE`` identities; past that, rows pass
+        through, so a caller that drops duplicate ids downstream gets the
+        same rows either way."""
+        state = self._compiled(lines)
+        return dict(state.result(self._emitted), n_edges=len(state.edges))
 
     def compile_triples(self, lines):
         """The ``(subject, predicate, object)`` triples of one document:
@@ -458,7 +476,7 @@ class _Header:
                 entry = ('ok', self.term_parser.parse_statement(line, number))
             except BELParserWarning as exc:
                 entry = ('err', exc)
-            if len(self._statements) < 65536:  # bound executor memory
+            if len(self._statements) < _CACHE_SIZE:
                 self._statements[line] = entry
         if entry[0] == 'err':
             exc = entry[1]
@@ -680,25 +698,33 @@ class _CompileState:
                 'node_json': json.dumps(node, sort_keys=True,
                                         separators=(',', ':')),
             }
-            if len(row_cache) < 65536:  # bound executor memory
+            if len(row_cache) < _CACHE_SIZE:
                 row_cache[bel] = row
         return row
 
-    def result(self):
-        nodes = {bel: self._node_row(bel, node)
-                 for bel, node in self.nodes.items()}
+    def _node_id(self, bel):
+        return self._node_row(bel, self.nodes[bel])['node_id']
+
+    def result(self, emitted=None):
+        """The rows of this page. With ``emitted``, a pair of seen sets
+        (node identities, edge identities), only the rows whose identity
+        is not in them yet (see :meth:`DocumentCompiler.compile_new`)."""
+        nodes = [self._node_row(bel, node) for bel, node in self.nodes.items()
+                 if emitted is None or _first_sighting(emitted[0], bel)]
         edges = []
         for key, (source, target, relation, citation_db, citation_id,
                   evidence, annotations, subject_modifier, object_modifier,
                   line, source_node, target_node) in self.edges.items():
+            if emitted is not None and not _first_sighting(emitted[1], key):
+                continue
             triple = edge_to_triple(source_node, target_node, relation,
                                     object_modifier)
             edges.append({
                 'edge_id': _edge_id(key),
                 'source_bel': source,
-                'source_id': nodes[source]['node_id'],
+                'source_id': self._node_id(source),
                 'target_bel': target,
-                'target_id': nodes[target]['node_id'],
+                'target_id': self._node_id(target),
                 'relation': relation,
                 'citation_db': citation_db,
                 'citation_id': citation_id,
@@ -719,7 +745,7 @@ class _CompileState:
             })
         return {
             'metadata': self.header.metadata,
-            'nodes': list(nodes.values()),
+            'nodes': nodes,
             'edges': edges,
             'warnings': self.warnings,
         }
@@ -742,6 +768,16 @@ def _unquote(s):
     if s.startswith('"') and s.endswith('"') and len(s) >= 2:
         return s[1:-1]
     return s
+
+
+def _first_sighting(seen, identity):
+    """False if ``identity`` is in ``seen``; else True, and ``identity``
+    joins ``seen`` while it holds fewer than ``_CACHE_SIZE`` entries."""
+    if identity in seen:
+        return False
+    if len(seen) < _CACHE_SIZE:
+        seen.add(identity)
+    return True
 
 
 def _json_or_none(obj):

@@ -25,8 +25,11 @@ file://, hdfs://, s3a://):
   silently mixing two grammars in one index.
 
 Scale shape: the key is a 32-hex md5 of (header, statement, qualified) —
-uniformly distributed by construction, so the anti-join and the
-batch-key distinct shuffle short uniform strings with no skew. The
+uniformly distributed by construction, so the anti-join shuffles short
+uniform strings with no skew. The batch-key distinct runs before the
+hash, on the stage-1 columns: its header column is the header's md5, a
+newline and the full header text, about 850 bytes per key on a 16-line
+header, so that shuffle carries the header text on every key. The
 ``keys/`` scan reads exactly one 16-byte-entropy column; the index
 grows with the corpus's unique-statement space (orders of magnitude
 below document count on web corpora), and parse cost is paid once per
@@ -40,8 +43,8 @@ compiler options unchanged. Each executor parses a header once and
 prepares one control state per (header, qualified flag) — a placeholder
 or empty one — and parses each key's one statement line against them. Before the parse the keys are
 repartitioned round-robin over ``defaultParallelism`` partitions:
-AQE sizes partitions by bytes and would put the short keys of a whole
-batch into one partition, while the parse costs CPU per row, so without
+AQE sizes partitions by bytes and would put the keys of a whole batch
+into one partition, while the parse costs CPU per row, so without
 the repartition one Python task would parse every novel key while the
 other cores idle.
 

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from .bel.compiler import DocumentCompiler
 from .corpus import extract_text, load_corpus_catalog
-from .schemas import LINEAGE_SCHEMA, PARSED_SCHEMA
+from .schemas import COMMIT_PARSED_SCHEMA, LINEAGE_SCHEMA, PARSED_SCHEMA
 
 #: lines that can possibly be BEL content: control/definition records or
 #: function-call-shaped statements. Everything else on a web page is prose.
@@ -52,7 +52,8 @@ def masked_pages(pdf):
 
 
 def make_parse_func(catalog, compiler_options=None, spark=None):
-    """Build the Arrow-batched parse function for ``mapInPandas``.
+    """Build the Arrow-batched parse function for ``mapInPandas``: one
+    :data:`PARSED_SCHEMA` row per page, with all of its nodes and edges.
 
     ``catalog`` must be picklable (DictCatalog / ResourceCatalog). When a
     SparkSession is provided, the catalog ships as a BROADCAST variable —
@@ -60,7 +61,17 @@ def make_parse_func(catalog, compiler_options=None, spark=None):
     every task closure; at real namespace scale (HGNC/GO/CHEBI, tens of MB)
     that is the difference between per-task and per-executor transfer.
     """
+    return _page_parse_func(catalog, compiler_options, spark, commit=False)
+
+
+def _page_parse_func(catalog, compiler_options, spark, commit):
+    """The page loop of :func:`make_parse_func` and, with ``commit``, of
+    the graph commit of :func:`run_checkpointed`. The commit emits one
+    :data:`COMMIT_PARSED_SCHEMA` row per page: the nodes and edges new to
+    the Python task (:meth:`DocumentCompiler.compile_new`), and in
+    ``n_edges`` the count of all of the page's edges."""
     import hashlib
+    import itertools
 
     import pandas as pd
 
@@ -68,24 +79,27 @@ def make_parse_func(catalog, compiler_options=None, spark=None):
     catalog_bc = None
     if spark is not None:
         catalog_bc = spark.sparkContext.broadcast(catalog)
+    columns = (COMMIT_PARSED_SCHEMA if commit else PARSED_SCHEMA).names
 
     def parse(batches):
         resources = catalog_bc.value if catalog_bc is not None else catalog
         compiler = DocumentCompiler(resources=resources, **options)
         for pdf in batches:
-            out = {k: [] for k in (
-                'url', 'lang', 'text_sha256', 'n_lines', 'n_statements',
-                'nodes', 'edges', 'warnings')}
+            out = {k: [] for k in columns}
+            langs = itertools.repeat(None) if commit else pdf['lang']
             for url, lang, (text, lines) in zip(
-                    pdf['url'], pdf['lang'], masked_pages(pdf)):
-                n_statements = sum(1 for ln in lines if ln)
-                result = compiler.compile(lines)
+                    pdf['url'], langs, masked_pages(pdf)):
                 out['url'].append(url)
-                out['lang'].append(lang)
-                out['text_sha256'].append(
-                    hashlib.sha256(text.encode('utf8')).hexdigest())
-                out['n_lines'].append(len(lines))
-                out['n_statements'].append(n_statements)
+                out['n_statements'].append(sum(1 for ln in lines if ln))
+                if commit:
+                    result = compiler.compile_new(lines)
+                    out['n_edges'].append(result['n_edges'])
+                else:
+                    result = compiler.compile(lines)
+                    out['lang'].append(lang)
+                    out['text_sha256'].append(
+                        hashlib.sha256(text.encode('utf8')).hexdigest())
+                    out['n_lines'].append(len(lines))
                 out['nodes'].append(result['nodes'])
                 out['edges'].append(result['edges'])
                 out['warnings'].append(result['warnings'])
@@ -139,8 +153,10 @@ def statement_keys(documents: DataFrame, catalog=None,
     the header column that :meth:`DocumentCompiler.statement_key_triples`
     reads back in stage 3 (see :func:`extract_triples_deduped` for why
     the qualified flag, and only that flag, of the surrounding control
-    state reaches the triple); the distinct shuffles short uniform
-    strings only."""
+    state reaches the triple). The distinct shuffles whole keys, and the
+    header column is the header's md5, a newline and the full header
+    text, so on a 16-line header it carries about 850 bytes per key
+    against a few dozen for the statement."""
     if catalog is None:
         catalog = load_corpus_catalog()
     return _statement_keys(
@@ -189,7 +205,8 @@ def _parse_statement_keys(keys: DataFrame, catalog_bc, compiler_options,
 
     The keys are first spread round-robin over
     ``defaultParallelism`` partitions. AQE sizes the partitions of the
-    preceding distinct by bytes, and the keys are short strings, so it
+    preceding distinct by bytes, and a batch's keys, header text
+    included, stay far below its advisory partition size, so it
     coalesces them into one partition; but this stage costs CPU per row,
     and one partition would parse every key in a single Python task. A
     ``repartition(n)`` is a ``REPARTITION_BY_NUM`` exchange, which AQE
@@ -254,17 +271,19 @@ def extract_triples_deduped(documents: DataFrame, catalog=None,
     and control-line code of :meth:`DocumentCompiler.compile` over the
     page, and both stages build their compiler from the caller's
     options unchanged;
-    stage 2: shuffle-distinct on md5(header)+statement+flag (short
-    strings, uniform keys); stage 3: parse the survivors. Stage 3 parses
-    each header once — the header definitions and the term parser — and
+    stage 2: shuffle-distinct on the (header, statement, flag) key, whose
+    header column is md5(header), a newline and the full header text
+    (about 850 bytes per key on a 16-line header); stage 3: parse the
+    survivors. Stage 3 parses each header once — the header definitions
+    and the term parser — and
     prepares one control state per (header, qualified flag): a
     placeholder citation and evidence for qualified keys or an empty
     control state for unqualified ones (so qualified relations are rejected exactly as they were in
     situ) — and parses each key's one line against it
     (:meth:`DocumentCompiler.statement_key_triples`). Its input is
     repartitioned round-robin over ``defaultParallelism`` partitions:
-    AQE sizes the distinct's partitions by bytes and would coalesce the
-    short keys into one partition, while stage 3 costs CPU per row, so
+    AQE sizes the distinct's partitions by bytes and would coalesce a
+    batch's keys into one partition, while stage 3 costs CPU per row, so
     it must run as one wave across all cores. Parse cost scales with
     UNIQUE content, not corpus size. The output equals
     :func:`extract_triples` on ANY corpus, including hostile pages with
@@ -762,7 +781,14 @@ def run_checkpointed(spark, documents: DataFrame, out_dir: str,
     Buckets (xxhash64(url) % n_buckets) are processed in ``commit_groups``
     commit units. Per unit:
 
-    1. parse the unit's documents (one mapInPandas pass),
+    1. parse the unit's documents (one mapInPandas pass). Each Python
+       task emits a node or edge row only the first time it meets its
+       identity (a seen set of canonical BEL strings and edge identity
+       tuples, capped at 65,536 entries each), so a repeated row is
+       neither built nor shipped through Arrow; the ``dropDuplicates`` on
+       ``node_id`` / ``edge_id`` removes what tasks still share. Each
+       document's edge count, repeated edges included, travels as a
+       scalar column for the lineage metrics,
     2. MERGE: drop rows whose content-hash key (node_id / edge_id) is
        already committed — an anti-join against the committed key column
        only (column-pruned parquet scan, uniform hash keys, the
@@ -808,6 +834,10 @@ def _run_checkpointed_locked(spark, docs, fs, lease, n_buckets, catalog,
     if not todo:
         return {'skipped_buckets': len(done), 'processed_buckets': 0}
 
+    if catalog is None:
+        catalog = load_corpus_catalog()
+    parse = _page_parse_func(catalog, compiler_options, spark, commit=True)
+
     # NOTE: the raw documents table is deliberately NOT persisted — at design
     # scale (100 TB of html/text) caching the input is impossible; the bucket
     # column is a cheap xxhash64 recomputed per scan, and each commit group's
@@ -818,13 +848,15 @@ def _run_checkpointed_locked(spark, docs, fs, lease, n_buckets, catalog,
         group = todo[start:start + group_size]
         cid = 'g{:04d}-{}'.format(group[0], hashlib.md5(
             ','.join(map(str, group)).encode()).hexdigest()[:8])
-        group_docs = docs.where(F.col('bucket').isin(group))
-        result = build_graph(group_docs.drop('bucket'), catalog=catalog,
-                             compiler_options=compiler_options, persist=False)
-        parsed = result.parsed.withColumn(
-            'bucket', F.pmod(F.xxhash64('url'), F.lit(n_buckets)).cast('int'))
-        parsed = parsed.persist()
+        parsed = (
+            docs.where(F.col('bucket').isin(group))
+            .select('url', 'html', 'text')
+            .mapInPandas(parse, schema=COMMIT_PARSED_SCHEMA)
+            .withColumn('bucket', F.pmod(F.xxhash64('url'),
+                                         F.lit(n_buckets)).cast('int'))
+            .persist())
 
+        # each Python task emitted a node or edge once, but tasks overlap
         nodes = (parsed.select('bucket', F.explode('nodes').alias('n'))
                  .select('bucket', 'n.*').dropDuplicates(['node_id']))
         edges = (parsed.select('bucket', 'url', F.explode('edges').alias('e'))
@@ -863,7 +895,7 @@ def _run_checkpointed_locked(spark, docs, fs, lease, n_buckets, catalog,
         for r in parsed.groupBy('bucket').agg(
                 F.count('*').alias('n_docs'),
                 F.sum('n_statements').alias('n_statements'),
-                F.sum(F.size('edges')).alias('n_edges'),
+                F.sum('n_edges').alias('n_edges'),
                 F.sum(F.size('warnings')).alias('n_warnings')).collect():
             metrics[str(r['bucket'])] = {k: r[k] for k in zeros}
         parsed.unpersist()

@@ -75,6 +75,18 @@ PARSED_SCHEMA = StructType([
     StructField('warnings', ArrayType(WARNING_STRUCT), False),
 ])
 
+#: one row per document of the graph commit (``run_checkpointed``): the
+#: nodes and edges its Python task had not emitted yet, and the document's
+#: edge count, repeated edges included
+COMMIT_PARSED_SCHEMA = StructType([
+    PARSED_SCHEMA['url'],
+    PARSED_SCHEMA['n_statements'],
+    StructField('n_edges', IntegerType(), False),
+    PARSED_SCHEMA['nodes'],
+    PARSED_SCHEMA['edges'],
+    PARSED_SCHEMA['warnings'],
+])
+
 TRIPLES_SCHEMA = StructType([
     StructField('subject', StringType(), False),
     StructField('predicate', StringType(), False),

@@ -1,5 +1,4 @@
-"""Skew-handling utilities: salted two-phase aggregation and salted
-repartitioning.
+"""Skew-handling utilities: salted two-phase aggregation.
 
 The north rule calls for explicit hot-key handling: a handful of namespaces
 (HGNC, GO, CHEBI) dominate mentions, and popular nodes dominate degree
@@ -8,19 +7,6 @@ keys these helpers implement the classic salt → partial-agg → unsalt →
 final-agg pattern so no single reducer owns a hot key.
 """
 from pyspark.sql import DataFrame, functions as F
-
-
-def repartition_salted(df: DataFrame, key_col: str, salt_buckets: int = 32,
-                       partitions=None) -> DataFrame:
-    """Repartition by (key, salt) so one hot key spreads over salt_buckets
-    partitions. Salt is derived from a stable row hash — deterministic."""
-    salted = df.withColumn(
-        '_salt', F.pmod(F.xxhash64(*df.columns), F.lit(salt_buckets)))
-    if partitions:
-        out = salted.repartition(partitions, F.col(key_col), F.col('_salt'))
-    else:
-        out = salted.repartition(F.col(key_col), F.col('_salt'))
-    return out.drop('_salt')
 
 
 def salted_count(df: DataFrame, key_col: str, salt_buckets: int = 32,

@@ -3,7 +3,7 @@
 Everything here compiles to built-in Spark SQL functions (whole-stage
 codegen) — no Python in the hot path.
 """
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 #: BPE-ish word/punctuation splitter: words, numbers, or single punctuation
 BPE_ISH_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
@@ -48,11 +48,3 @@ def shingles(col='text', n=3) -> Column:
     convenience; see shingle_windows for the fast two-phase path)."""
     return shingle_windows(whitespace_tokens(col), n)
 
-
-def with_token_stats(docs: DataFrame, text_col='text') -> DataFrame:
-    return docs.select(
-        '*',
-        token_count(text_col).alias('n_tokens'),
-        bpe_ish_token_count(text_col).alias('n_bpe_tokens'),
-        F.length(text_col).alias('n_chars_computed'),
-    )

@@ -302,15 +302,6 @@ def train_unigram_spark(word_counts: DataFrame, vocab_size: int = 2000,
     return vocab
 
 
-def word_counts_from_docs(docs: DataFrame, text_col: str = 'text'
-                          ) -> DataFrame:
-    """(word, n) corpus statistic — the only corpus-sized stage of
-    training: JVM regex pre-tokenize + one count shuffle on the word."""
-    return (docs.select(F.explode(F.regexp_extract_all(
-        F.col(text_col), F.lit(BPE_ISH_PATTERN), 0)).alias('word'))
-        .groupBy('word').agg(F.count(F.lit(1)).alias('n')))
-
-
 def word_unigram_counts(words: DataFrame, vocab: dict,
                         word_col: str = 'word',
                         max_piece_len: int = MAX_PIECE_LEN) -> DataFrame:

@@ -1,12 +1,18 @@
-"""Checkpoint-resume drill: hard-kill a run mid-flight, re-submit, verify
-completeness and zero duplicates.
+"""Checkpoint-resume drill: hard-kill a run right after its first commit,
+re-submit, verify that the resume skips the committed buckets and that the
+output is complete and duplicate-free.
 
-1. Launch run_pipeline on a synthetic corpus in a subprocess.
-2. SIGKILL it partway through.
-3. Re-run with the same --output.
-4. Verify: all buckets done, edge_ids unique, triples == expected.
+1. Launch run_pipeline on a synthetic corpus (32 buckets, 8 commit groups)
+   in a subprocess.
+2. Poll the output dir; SIGKILL the run as soon as its first MANIFEST.json
+   swap is visible. The drill fails when the run ends, or the timeout
+   passes, before that swap.
+3. Re-run with the same --output. The drill fails unless the resume skips
+   the committed buckets (``skipped_buckets`` >= 1) and processes the rest
+   (``processed_buckets`` >= 1).
+4. Verify: edge_ids unique, triples == expected.
 
-Usage: python scripts/drill_resume.py [n_docs] [kill_after_sec]
+Usage: python scripts/drill_resume.py [n_docs] [timeout_sec]
 """
 import json
 import os
@@ -18,42 +24,65 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 OUT = '/tmp/pybel_spark_drill_out'
+N_BUCKETS = 32
 
 
 def launch(n_docs):
     return subprocess.Popen(
         [sys.executable, 'scripts/run_pipeline.py', '--synthetic', str(n_docs),
-         '--output', OUT, '--buckets', '32'],
+         '--output', OUT, '--buckets', str(N_BUCKETS)],
         cwd=REPO, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
         text=True, preexec_fn=os.setsid)
 
 
+def kill(proc):
+    os.killpg(os.getpgid(proc.pid), signal.SIGKILL)
+    proc.wait()
+
+
+def kill_at_first_commit(proc, timeout):
+    """SIGKILL ``proc`` once MANIFEST.json exists; return the committed
+    buckets it names. The manifest only ever appears by an atomic rename,
+    so its existence is the first commit."""
+    mpath = os.path.join(OUT, 'MANIFEST.json')
+    start = time.monotonic()
+    deadline = start + timeout
+    while not os.path.exists(mpath):
+        if proc.poll() is not None:
+            raise SystemExit('RESUME DRILL FAILED: run 1 exited ({}) before '
+                             'its first commit'.format(proc.returncode))
+        if time.monotonic() > deadline:
+            kill(proc)
+            raise SystemExit('RESUME DRILL FAILED: no commit within '
+                             '{:.0f}s'.format(timeout))
+        time.sleep(0.02)
+    kill(proc)
+    print('killed run 1 {:.1f}s after launch'.format(time.monotonic() - start))
+    with open(mpath) as f:
+        manifest = json.load(f)
+    return manifest, sorted(b for c in manifest['commits']
+                            for b in c['buckets'])
+
+
 def main():
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 30_000
-    kill_after = float(sys.argv[2]) if len(sys.argv) > 2 else 25.0
+    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 20_000
+    timeout = float(sys.argv[2]) if len(sys.argv) > 2 else 300.0
 
     shutil.rmtree(OUT, ignore_errors=True)
 
-    print('launching run 1 (will be killed after {:.0f}s)...'.format(kill_after))
-    proc = launch(n_docs)
-    time.sleep(kill_after)
-    os.killpg(os.getpgid(proc.pid), signal.SIGKILL)
-    proc.wait()
-    print('killed run 1')
-    time.sleep(3)
-
-    mpath = os.path.join(OUT, 'MANIFEST.json')
-    if os.path.exists(mpath):
-        with open(mpath) as f:
-            manifest = json.load(f)
-        committed = [c['commit_id'] for c in manifest['commits']]
-        edges_dir = os.path.join(OUT, 'edges')
-        on_disk = os.listdir(edges_dir) if os.path.isdir(edges_dir) else []
-        orphans = sorted(set(on_disk) - set(committed))
-        print('state after kill: {} committed commits, {} orphan data dirs '
-              '{}'.format(len(committed), len(orphans), orphans))
-    else:
-        print('state after kill: no manifest yet')
+    print('launching run 1 (killed at its first commit, timeout '
+          '{:.0f}s)...'.format(timeout))
+    manifest, committed = kill_at_first_commit(launch(n_docs), timeout)
+    commit_ids = [c['commit_id'] for c in manifest['commits']]
+    edges_dir = os.path.join(OUT, 'edges')
+    on_disk = os.listdir(edges_dir) if os.path.isdir(edges_dir) else []
+    orphans = sorted(set(on_disk) - set(commit_ids))
+    print('state after kill: {} commits holding {} of {} buckets, {} orphan '
+          'data dirs {}'.format(len(commit_ids), len(committed), N_BUCKETS,
+                                len(orphans), orphans))
+    if len(committed) == N_BUCKETS:
+        raise SystemExit('RESUME DRILL FAILED: run 1 committed every bucket '
+                         'before the kill')
 
     print('launching run 2 (resume)...')
     proc = launch(n_docs)
@@ -61,6 +90,12 @@ def main():
     assert proc.returncode == 0, 'resume run failed'
     summary = json.loads(out.strip().splitlines()[-1])
     print('resume summary:', json.dumps(summary))
+    expected_stats = {'skipped_buckets': len(committed),
+                      'processed_buckets': N_BUCKETS - len(committed)}
+    if summary['buckets'] != expected_stats:
+        raise SystemExit('RESUME DRILL FAILED: the resume did not skip '
+                         'exactly the committed buckets: {} != {}'.format(
+                             summary['buckets'], expected_stats))
 
     # verify with a fresh session
     verify = r'''
@@ -91,7 +126,8 @@ spark.stop()
     print('verification:', json.dumps(verdict))
     assert verdict['edges'] == verdict['unique_edge_ids'], 'duplicate edges!'
     assert verdict['triples_ok'], 'triples mismatch!'
-    print('RESUME DRILL PASSED: no duplicates, complete output after kill+resume')
+    print('RESUME DRILL PASSED: resumed past {} committed buckets; no '
+          'duplicates, complete output'.format(len(committed)))
     shutil.rmtree(OUT, ignore_errors=True)
 
 

@@ -239,6 +239,114 @@ def test_all_none_page_is_the_empty_page(spark):
     assert statement_keys(docs).count() == 0
 
 
+def _json_rows(rows, drop=()):
+    """Sorted canonical JSON of row dicts less the ``drop`` columns."""
+    import json
+
+    return sorted(json.dumps({k: v for k, v in row.items() if k not in drop},
+                             sort_keys=True) for row in rows)
+
+
+def test_commit_parse_emits_each_identity_once_per_task(monkeypatch):
+    """The graph commit's parse function emits each node and edge row
+    once per Python task, across the pages of one Arrow batch and across
+    the batches of one iterator. Its per-document edge count and warnings
+    are those of a per-page compile, and capping the seen sets at one
+    entry lets duplicates through without changing the union of rows."""
+    import pandas as pd
+
+    from pybel_spark.bel import compiler as compiler_module
+    from pybel_spark.bel.compiler import DocumentCompiler
+    from pybel_spark.corpus import CorpusSpec, load_corpus_catalog
+    from pybel_spark.pipeline import _page_parse_func
+
+    catalog = load_corpus_catalog()
+    spec = CorpusSpec()
+    texts = [spec.doc_text(i) for i in range(6)] * 2
+
+    def batch(tag):
+        return pd.DataFrame({
+            'url': ['{}/{}'.format(tag, i) for i in range(len(texts))],
+            'html': [None] * len(texts), 'text': texts})
+
+    def commit_rows():
+        parse = _page_parse_func(catalog, None, None, commit=True)
+        return pd.concat(parse([batch('a'), batch('b')]))
+
+    compiler = DocumentCompiler(resources=catalog)
+    per_page = [compiler.compile(mask_non_bel_lines(t)) for t in texts] * 2
+    rows = commit_rows()
+    assert list(rows['n_edges']) == [len(r['edges']) for r in per_page]
+    assert [_json_rows(w) for w in rows['warnings']] \
+        == [_json_rows(r['warnings']) for r in per_page]
+    for kind, key in (('nodes', 'node_id'), ('edges', 'edge_id')):
+        emitted = [row for page in rows[kind] for row in page]
+        ids = [row[key] for row in emitted]
+        assert len(ids) == len(set(ids)), kind
+        assert set(ids) == {row[key] for r in per_page for row in r[kind]}
+        assert _json_rows(emitted) == sorted(set(
+            _json_rows(row for r in per_page for row in r[kind]))), kind
+
+    monkeypatch.setattr(compiler_module, '_CACHE_SIZE', 1)
+    capped = commit_rows()
+    for kind in ('nodes', 'edges'):
+        union = set(_json_rows(row for page in capped[kind] for row in page))
+        assert union == set(_json_rows(
+            row for page in rows[kind] for row in page)), kind
+    assert sum(map(len, capped['edges'])) > sum(map(len, rows['edges']))
+
+
+def test_checkpointed_graph_equals_build_graph(spark):
+    """``run_checkpointed`` on a corpus whose units repeat inside each
+    partition commits the graph of ``build_graph``: the same nodes (but
+    for ``bucket``), the same edges (but for the ``url``, ``bucket`` and
+    ``line`` of the document that kept each one), the same warnings, and
+    per-bucket lineage equal to ``doc_metrics`` summed by bucket."""
+    from pyspark.sql import functions as F
+
+    from pybel_spark.pipeline import read_lineage
+
+    # 400 documents of 1-3 of the 78 pool units in 2 partitions: each unit
+    # recurs several times inside each Python task
+    docs = generate_documents(spark, 400, partitions=2).persist()
+    out_dir = tempfile.mkdtemp(prefix='pybel_spark_commit_')
+    try:
+        run_checkpointed(spark, docs, out_dir, n_buckets=4, commit_groups=2)
+        graph = read_graph(spark, out_dir)
+        ref = build_graph(docs, persist=True)
+
+        def collect(df, drop=()):
+            return _json_rows(r.asDict(recursive=True)
+                              for r in df.drop(*drop).collect())
+
+        assert collect(graph['nodes'], ['bucket']) == collect(ref.nodes)
+        # an edge id fixes every edge column but url and line, so the
+        # document that kept it does not matter
+        every_edge = ref.parsed.select(F.explode('edges').alias('e')) \
+            .select('e.*')
+        assert len(set(collect(every_edge, ['line']))) == ref.edges.count()
+        assert collect(graph['edges'], ['url', 'bucket', 'line']) \
+            == collect(ref.edges, ['url', 'line'])
+        assert collect(graph['warnings'], ['bucket']) \
+            == collect(ref.warnings)
+
+        per_bucket = ref.doc_metrics.groupBy(
+            F.pmod(F.xxhash64('url'), F.lit(4)).cast('int').alias('bucket')
+        ).agg(F.count('*').alias('n_docs'),
+              F.sum('n_statements').alias('n_statements'),
+              F.sum('n_edges').alias('n_edges'),
+              F.sum('n_warnings').alias('n_warnings'))
+        columns = ['bucket', 'n_docs', 'n_statements', 'n_edges',
+                   'n_warnings']
+        assert sorted(map(tuple, read_lineage(spark, out_dir)
+                          .select(columns).collect())) \
+            == sorted(map(tuple, per_bucket.select(columns).collect()))
+        ref.parsed.unpersist()
+    finally:
+        docs.unpersist()
+        shutil.rmtree(out_dir, ignore_errors=True)
+
+
 def test_deduped_hostile_context_equivalence(spark):
     """ADVICE r2: a statement OUTSIDE a valid citation/evidence context must
     not leak triples through the pre-parse dedup path — while structural
