@@ -103,6 +103,11 @@ def statement_key_header(documents, definitions):
     return hashlib.md5(text.encode('utf8')).hexdigest() + '\n' + text  # noqa: S324
 
 
+def _node_id(bel):
+    """Content-addressed node id: the md5 of the canonical BEL string."""
+    return hashlib.md5(bel.encode('utf8')).hexdigest()  # noqa: S324
+
+
 def _edge_id(key):
     """Content-addressed edge id of an edge identity tuple (see
     :meth:`_CompileState.add_edge_row`).
@@ -682,7 +687,7 @@ class _CompileState:
             concept = node.get('concept') or {}
             row = {
                 'node_bel': bel,
-                'node_id': hashlib.md5(bel.encode('utf8')).hexdigest(),  # noqa: S324
+                'node_id': _node_id(bel),
                 'function': node['function'],
                 'namespace': concept.get('namespace'),
                 'name': concept.get('name'),
@@ -702,15 +707,19 @@ class _CompileState:
                 row_cache[bel] = row
         return row
 
-    def _node_id(self, bel):
-        return self._node_row(bel, self.nodes[bel])['node_id']
-
     def result(self, emitted=None):
         """The rows of this page. With ``emitted``, a pair of seen sets
         (node identities, edge identities), only the rows whose identity
         is not in them yet (see :meth:`DocumentCompiler.compile_new`)."""
         nodes = [self._node_row(bel, node) for bel, node in self.nodes.items()
                  if emitted is None or _first_sighting(emitted[0], bel)]
+        # endpoint ids without building a row: a skipped node's id is the
+        # md5 its row would carry
+        ids = {row['node_bel']: row['node_id'] for row in nodes}
+
+        def node_id(bel):
+            return ids.get(bel) or _node_id(bel)
+
         edges = []
         for key, (source, target, relation, citation_db, citation_id,
                   evidence, annotations, subject_modifier, object_modifier,
@@ -722,9 +731,9 @@ class _CompileState:
             edges.append({
                 'edge_id': _edge_id(key),
                 'source_bel': source,
-                'source_id': self._node_id(source),
+                'source_id': node_id(source),
                 'target_bel': target,
-                'target_id': self._node_id(target),
+                'target_id': node_id(target),
                 'relation': relation,
                 'citation_db': citation_db,
                 'citation_id': citation_id,

@@ -51,6 +51,21 @@ def masked_pages(pdf):
         yield text, mask_non_bel_lines(text)
 
 
+def _task_compilers(catalog, compiler_options, spark):
+    """A function that builds each Python task's :class:`DocumentCompiler`.
+    With a SparkSession, the catalog ships as a broadcast variable."""
+    options = compiler_options or {}
+    catalog_bc = None
+    if spark is not None:
+        catalog_bc = spark.sparkContext.broadcast(catalog)
+
+    def new_compiler():
+        resources = catalog_bc.value if catalog_bc is not None else catalog
+        return DocumentCompiler(resources=resources, **options)
+
+    return new_compiler
+
+
 def make_parse_func(catalog, compiler_options=None, spark=None):
     """Build the Arrow-batched parse function for ``mapInPandas``: one
     :data:`PARSED_SCHEMA` row per page, with all of its nodes and edges.
@@ -61,45 +76,54 @@ def make_parse_func(catalog, compiler_options=None, spark=None):
     every task closure; at real namespace scale (HGNC/GO/CHEBI, tens of MB)
     that is the difference between per-task and per-executor transfer.
     """
-    return _page_parse_func(catalog, compiler_options, spark, commit=False)
-
-
-def _page_parse_func(catalog, compiler_options, spark, commit):
-    """The page loop of :func:`make_parse_func` and, with ``commit``, of
-    the graph commit of :func:`run_checkpointed`. The commit emits one
-    :data:`COMMIT_PARSED_SCHEMA` row per page: the nodes and edges new to
-    the Python task (:meth:`DocumentCompiler.compile_new`), and in
-    ``n_edges`` the count of all of the page's edges."""
     import hashlib
-    import itertools
 
     import pandas as pd
 
-    options = compiler_options or {}
-    catalog_bc = None
-    if spark is not None:
-        catalog_bc = spark.sparkContext.broadcast(catalog)
-    columns = (COMMIT_PARSED_SCHEMA if commit else PARSED_SCHEMA).names
+    new_compiler = _task_compilers(catalog, compiler_options, spark)
 
     def parse(batches):
-        resources = catalog_bc.value if catalog_bc is not None else catalog
-        compiler = DocumentCompiler(resources=resources, **options)
+        compiler = new_compiler()
         for pdf in batches:
-            out = {k: [] for k in columns}
-            langs = itertools.repeat(None) if commit else pdf['lang']
+            out = {k: [] for k in (
+                'url', 'lang', 'text_sha256', 'n_lines', 'n_statements',
+                'nodes', 'edges', 'warnings')}
             for url, lang, (text, lines) in zip(
-                    pdf['url'], langs, masked_pages(pdf)):
+                    pdf['url'], pdf['lang'], masked_pages(pdf)):
+                n_statements = sum(1 for ln in lines if ln)
+                result = compiler.compile(lines)
+                out['url'].append(url)
+                out['lang'].append(lang)
+                out['text_sha256'].append(
+                    hashlib.sha256(text.encode('utf8')).hexdigest())
+                out['n_lines'].append(len(lines))
+                out['n_statements'].append(n_statements)
+                out['nodes'].append(result['nodes'])
+                out['edges'].append(result['edges'])
+                out['warnings'].append(result['warnings'])
+            yield pd.DataFrame(out)
+
+    return parse
+
+
+def _commit_parse_func(catalog, compiler_options, spark):
+    """The parse function of the graph commit of :func:`run_checkpointed`:
+    one :data:`COMMIT_PARSED_SCHEMA` row per page, with the nodes and edges
+    new to the Python task (:meth:`DocumentCompiler.compile_new`) and in
+    ``n_edges`` the count of all of the page's edges."""
+    import pandas as pd
+
+    new_compiler = _task_compilers(catalog, compiler_options, spark)
+
+    def parse(batches):
+        compiler = new_compiler()
+        for pdf in batches:
+            out = {k: [] for k in COMMIT_PARSED_SCHEMA.names}
+            for url, (_, lines) in zip(pdf['url'], masked_pages(pdf)):
+                result = compiler.compile_new(lines)
                 out['url'].append(url)
                 out['n_statements'].append(sum(1 for ln in lines if ln))
-                if commit:
-                    result = compiler.compile_new(lines)
-                    out['n_edges'].append(result['n_edges'])
-                else:
-                    result = compiler.compile(lines)
-                    out['lang'].append(lang)
-                    out['text_sha256'].append(
-                        hashlib.sha256(text.encode('utf8')).hexdigest())
-                    out['n_lines'].append(len(lines))
+                out['n_edges'].append(result['n_edges'])
                 out['nodes'].append(result['nodes'])
                 out['edges'].append(result['edges'])
                 out['warnings'].append(result['warnings'])
@@ -836,7 +860,7 @@ def _run_checkpointed_locked(spark, docs, fs, lease, n_buckets, catalog,
 
     if catalog is None:
         catalog = load_corpus_catalog()
-    parse = _page_parse_func(catalog, compiler_options, spark, commit=True)
+    parse = _commit_parse_func(catalog, compiler_options, spark)
 
     # NOTE: the raw documents table is deliberately NOT persisted — at design
     # scale (100 TB of html/text) caching the input is impossible; the bucket

@@ -5,14 +5,14 @@ output is complete and duplicate-free.
 1. Launch run_pipeline on a synthetic corpus (32 buckets, 8 commit groups)
    in a subprocess.
 2. Poll the output dir; SIGKILL the run as soon as its first MANIFEST.json
-   swap is visible. The drill fails when the run ends, or the timeout
+   swap is visible. The drill fails when the run ends, or FIRST_COMMIT_TIMEOUT
    passes, before that swap.
 3. Re-run with the same --output. The drill fails unless the resume skips
-   the committed buckets (``skipped_buckets`` >= 1) and processes the rest
-   (``processed_buckets`` >= 1).
+   exactly the committed buckets (``skipped_buckets``) and processes the
+   rest (``processed_buckets``).
 4. Verify: edge_ids unique, triples == expected.
 
-Usage: python scripts/drill_resume.py [n_docs] [timeout_sec]
+Usage: python scripts/drill_resume.py [n_docs]
 """
 import json
 import os
@@ -25,6 +25,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 OUT = '/tmp/pybel_spark_drill_out'
 N_BUCKETS = 32
+#: seconds run 1 gets to make its first commit
+FIRST_COMMIT_TIMEOUT = 300.0
 
 
 def launch(n_docs):
@@ -40,13 +42,13 @@ def kill(proc):
     proc.wait()
 
 
-def kill_at_first_commit(proc, timeout):
+def kill_at_first_commit(proc):
     """SIGKILL ``proc`` once MANIFEST.json exists; return the committed
     buckets it names. The manifest only ever appears by an atomic rename,
     so its existence is the first commit."""
     mpath = os.path.join(OUT, 'MANIFEST.json')
     start = time.monotonic()
-    deadline = start + timeout
+    deadline = start + FIRST_COMMIT_TIMEOUT
     while not os.path.exists(mpath):
         if proc.poll() is not None:
             raise SystemExit('RESUME DRILL FAILED: run 1 exited ({}) before '
@@ -54,7 +56,7 @@ def kill_at_first_commit(proc, timeout):
         if time.monotonic() > deadline:
             kill(proc)
             raise SystemExit('RESUME DRILL FAILED: no commit within '
-                             '{:.0f}s'.format(timeout))
+                             '{:.0f}s'.format(FIRST_COMMIT_TIMEOUT))
         time.sleep(0.02)
     kill(proc)
     print('killed run 1 {:.1f}s after launch'.format(time.monotonic() - start))
@@ -65,14 +67,14 @@ def kill_at_first_commit(proc, timeout):
 
 
 def main():
+    if len(sys.argv) > 2:
+        raise SystemExit('usage: python scripts/drill_resume.py [n_docs]')
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 20_000
-    timeout = float(sys.argv[2]) if len(sys.argv) > 2 else 300.0
 
     shutil.rmtree(OUT, ignore_errors=True)
 
-    print('launching run 1 (killed at its first commit, timeout '
-          '{:.0f}s)...'.format(timeout))
-    manifest, committed = kill_at_first_commit(launch(n_docs), timeout)
+    print('launching run 1 (killed at its first commit)...')
+    manifest, committed = kill_at_first_commit(launch(n_docs))
     commit_ids = [c['commit_id'] for c in manifest['commits']]
     edges_dir = os.path.join(OUT, 'edges')
     on_disk = os.listdir(edges_dir) if os.path.isdir(edges_dir) else []

@@ -139,6 +139,20 @@ def test_pool_units_result_digest():
     unit, with their ids, column order and row order, hash to the frozen
     digest: the rows stay bit-identical whatever the compile loop
     records on the way."""
+    assert _pool_result_digest() == POOL_RESULT_SHA256
+
+
+def test_pool_units_result_digest_past_cache_cap(monkeypatch):
+    """With the compiler's caches capped at no entry, so that no node row
+    is ever cached, the pool units' rows still hash to the frozen digest:
+    an edge's endpoint ids never depend on the node-row cache."""
+    from pybel_spark.bel import compiler as compiler_module
+
+    monkeypatch.setattr(compiler_module, '_CACHE_SIZE', 0)
+    assert _pool_result_digest() == POOL_RESULT_SHA256
+
+
+def _pool_result_digest():
     pool = load_pool()
     digest = hashlib.sha256()
     compiler = DocumentCompiler(resources=load_corpus_catalog())
@@ -148,7 +162,7 @@ def test_pool_units_result_digest():
             [kind, [list(row.items()) for row in result[kind]]]
             for kind in ('nodes', 'edges', 'warnings')]
         digest.update(json.dumps(rows, separators=(',', ':')).encode('utf8'))
-    assert digest.hexdigest() == POOL_RESULT_SHA256
+    return digest.hexdigest()
 
 
 def test_header_warnings_keep_each_pages_line_numbers():

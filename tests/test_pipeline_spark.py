@@ -258,7 +258,7 @@ def test_commit_parse_emits_each_identity_once_per_task(monkeypatch):
     from pybel_spark.bel import compiler as compiler_module
     from pybel_spark.bel.compiler import DocumentCompiler
     from pybel_spark.corpus import CorpusSpec, load_corpus_catalog
-    from pybel_spark.pipeline import _page_parse_func
+    from pybel_spark.pipeline import _commit_parse_func
 
     catalog = load_corpus_catalog()
     spec = CorpusSpec()
@@ -270,7 +270,7 @@ def test_commit_parse_emits_each_identity_once_per_task(monkeypatch):
             'html': [None] * len(texts), 'text': texts})
 
     def commit_rows():
-        parse = _page_parse_func(catalog, None, None, commit=True)
+        parse = _commit_parse_func(catalog, None, None)
         return pd.concat(parse([batch('a'), batch('b')]))
 
     compiler = DocumentCompiler(resources=catalog)
