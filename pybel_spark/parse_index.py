@@ -28,8 +28,10 @@ Scale shape: the key is a 32-hex md5 of (header, statement, qualified) —
 uniformly distributed by construction, so the anti-join shuffles short
 uniform strings with no skew. The batch-key distinct runs before the
 hash, on the stage-1 columns: its header column is the header's md5, a
-newline and the full header text, about 850 bytes per key on a 16-line
-header, so that shuffle carries the header text on every key. The
+newline and the full header text. About 850 bytes of it per key on a
+16-line header cross Arrow and are hashed by the distinct; shuffle
+compression absorbs the repeated header in the shuffle files (about 70
+bytes per key in all on a novel perfbench batch). The
 ``keys/`` scan reads exactly one 16-byte-entropy column; the index
 grows with the corpus's unique-statement space (orders of magnitude
 below document count on web corpora), and parse cost is paid once per
@@ -78,13 +80,16 @@ import json
 
 from pyspark.sql import DataFrame, functions as F
 
-from .pipeline import (_parse_statement_keys, _statement_keys,
-                       load_corpus_catalog, statement_keys)
+from .pipeline import (_KEYED_TRIPLES_SCHEMA, _parse_statement_keys,
+                       _statement_keys, load_corpus_catalog, statement_keys)
 from .textops.sidecar import (read_json_sidecar, sidecar_exists,
                               write_json_sidecar)
 
 #: separator for the key preimage — cannot occur in sanitized BEL lines
 _SEP = '\u0000'
+#: schema of ``keys/``; like ``triples/`` (``_KEYED_TRIPLES_SCHEMA``) it is
+#: given to every read, so no read runs a Spark job to infer it from a footer
+_KEYS_SCHEMA = 'key_hash string'
 
 
 def _with_key_hash(keys: DataFrame) -> DataFrame:
@@ -174,7 +179,7 @@ def parse_index_update(documents: DataFrame, path: str, catalog=None,
         _statement_keys(documents, catalog_bc, compiler_options)).persist()
     try:
         n_batch = keys.count()
-        known = spark.read.parquet(path + '/keys')
+        known = spark.read.schema(_KEYS_SCHEMA).parquet(path + '/keys')
         novel = keys.join(known, on='key_hash', how='left_anti').persist()
         try:
             n_novel = novel.count()
@@ -196,7 +201,8 @@ def triples_from_index(spark, path: str, documents: DataFrame = None,
     :func:`parse_index_update`; keys absent from the index contribute
     nothing — probe-then-read is the caller's loop, by design, so a
     read never mutates the index)."""
-    t = spark.read.parquet(path + '/triples')
+    t = spark.read.schema(_KEYED_TRIPLES_SCHEMA).parquet(
+        path + '/triples')
     if documents is None:
         return t.select('subject', 'predicate', 'object').distinct()
     _check_options(spark, path, compiler_options)
@@ -227,8 +233,9 @@ def parse_index_stats(spark, path: str) -> dict:
     """Index health metrics: total keys ever parsed, stored triple rows,
     and distinct triples (rows > distinct indicates crash-replay
     duplicates, which are harmless but measurable)."""
-    keys = spark.read.parquet(path + '/keys')
-    t = spark.read.parquet(path + '/triples')
+    keys = spark.read.schema(_KEYS_SCHEMA).parquet(path + '/keys')
+    t = spark.read.schema(_KEYED_TRIPLES_SCHEMA).parquet(
+        path + '/triples')
     return {
         'keys': keys.count(),
         'triple_rows': t.count(),

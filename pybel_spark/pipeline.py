@@ -17,12 +17,15 @@ Spark-first design notes (100 TB scale):
   north rule requires it).
 """
 import re
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, functions as F
 
 from .bel.compiler import DocumentCompiler
 from .corpus import extract_text, load_corpus_catalog
-from .schemas import COMMIT_PARSED_SCHEMA, LINEAGE_SCHEMA, PARSED_SCHEMA
+from .schemas import (COMMIT_PARSED_SCHEMA, COMMITTED_TABLE_SCHEMAS,
+                      LINEAGE_SCHEMA, PARSED_SCHEMA)
 
 #: lines that can possibly be BEL content: control/definition records or
 #: function-call-shaped statements. Everything else on a web page is prose.
@@ -177,10 +180,12 @@ def statement_keys(documents: DataFrame, catalog=None,
     the header column that :meth:`DocumentCompiler.statement_key_triples`
     reads back in stage 3 (see :func:`extract_triples_deduped` for why
     the qualified flag, and only that flag, of the surrounding control
-    state reaches the triple). The distinct shuffles whole keys, and the
-    header column is the header's md5, a newline and the full header
-    text, so on a 16-line header it carries about 850 bytes per key
-    against a few dozen for the statement."""
+    state reaches the triple). The header column is the header's md5, a
+    newline and the full header text: on a 16-line header about 850 bytes
+    per key, against a few dozen for the statement, cross Arrow and are
+    hashed by the distinct. Shuffle compression absorbs the repeated
+    header in the shuffle files (about 70 bytes per key in all on a novel
+    perfbench batch)."""
     if catalog is None:
         catalog = load_corpus_catalog()
     return _statement_keys(
@@ -297,7 +302,8 @@ def extract_triples_deduped(documents: DataFrame, catalog=None,
     options unchanged;
     stage 2: shuffle-distinct on the (header, statement, flag) key, whose
     header column is md5(header), a newline and the full header text
-    (about 850 bytes per key on a 16-line header); stage 3: parse the
+    (about 850 bytes per key on a 16-line header cross Arrow and are
+    hashed; the compressed shuffle carries far fewer); stage 3: parse the
     survivors. Stage 3 parses each header once — the header definitions
     and the term parser — and
     prepares one control state per (header, qualified flag): a
@@ -416,7 +422,7 @@ def build_graph(documents: DataFrame, catalog=None, compiler_options=None,
 
 _MANIFEST = 'MANIFEST.json'
 _LOCK = 'WRITER.lock'
-_TABLES = ('nodes', 'edges', 'warnings')
+_TABLES = tuple(COMMITTED_TABLE_SCHEMAS)
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -795,6 +801,44 @@ def _committed_paths(fs: _OutputFS, manifest: dict, table: str) -> list:
     ]
 
 
+def _read_table(spark, table: str, paths: list) -> DataFrame:
+    """The committed ``table`` under ``paths``, read with its known schema:
+    a schema-less read runs a Spark job to read a parquet footer."""
+    return spark.read.schema(COMMITTED_TABLE_SCHEMAS[table]).parquet(*paths)
+
+
+def _write_tables(spark, fs: _OutputFS, cid: str, frames: dict) -> dict:
+    """Overwrite ``<table>/<cid>/`` with each ``{table: DataFrame}`` of
+    ``frames``, one thread per table, and return ``{table: wrote a part
+    file}``.
+
+    The tables of a commit do not depend on each other, and a small
+    table's write often ends in one task (AQE coalesces its shuffle into
+    one partition), so writing them one after another leaves the other
+    cores idle. Each thread runs under the caller's job group, local
+    properties and tags; each is wrapped on its own, because a wrap
+    captures one properties object and a Spark job sets its SQL execution
+    id in it. Every write has finished before the first error, in table
+    order, is raised, so no job of the caller outlives the call."""
+    def write(table, df):
+        df.write.mode('overwrite').parquet(fs._full(table, cid))
+
+    def target():
+        wrap = inheritable_thread_target(spark)
+        # without pinned threads (PYSPARK_PIN_THREAD=false) the wrap is the
+        # SparkSession itself, and no thread carries JVM local properties
+        return wrap(write) if callable(wrap) else write
+
+    with ThreadPoolExecutor(max_workers=max(1, len(frames))) as pool:
+        futures = [pool.submit(target(), table, df)
+                   for table, df in frames.items()]
+    for future in futures:
+        future.result()
+    # an all-duplicates unit writes zero part files; record that so
+    # readers never scan a schema-less empty dir
+    return {table: any(fs.part_files(table, cid)) for table in frames}
+
+
 def run_checkpointed(spark, documents: DataFrame, out_dir: str,
                      n_buckets: int = 64, catalog=None,
                      compiler_options=None, commit_groups: int = 8,
@@ -812,17 +856,25 @@ def run_checkpointed(spark, documents: DataFrame, out_dir: str,
        neither built nor shipped through Arrow; the ``dropDuplicates`` on
        ``node_id`` / ``edge_id`` removes what tasks still share. Each
        document's edge count, repeated edges included, travels as a
-       scalar column for the lineage metrics,
-    2. MERGE: drop rows whose content-hash key (node_id / edge_id) is
+       scalar column for the lineage metrics. The parse is cached for
+       the unit's four jobs and released whether the unit commits or
+       fails,
+    2. lineage: collect the per-bucket metrics — the cheapest job, run
+       first so that it is the one that fills the cache,
+    3. MERGE: drop rows whose content-hash key (node_id / edge_id) is
        already committed — an anti-join against the committed key column
        only (column-pruned parquet scan, uniform hash keys, the
        get-or-create upsert of the reference ``insert_graph``,
        cache_manager.py:848-903, expressed as a distributed join),
-    3. write the survivors to ``<table>/<commit_id>/`` (the commit id is a
-       pure function of the bucket group, so a rerun after a kill
-       overwrites its own orphans),
-    4. atomically swap MANIFEST.json to publish the commit + its
-       per-bucket lineage metrics.
+    4. write the survivors of the nodes, edges and warnings tables to
+       ``<table>/<commit_id>/`` at once, one thread per table,
+       each under the caller's job group (the commit id is a pure
+       function of the bucket group, so a rerun after a kill overwrites
+       its own orphans); the call waits for all three writes, and a
+       failed write raises only after the others have finished,
+    5. atomically swap MANIFEST.json to publish the commit + its
+       per-bucket lineage metrics. Nothing reads a table before this
+       swap, so the order of the writes does not matter.
 
     A kill mid-unit loses at most that unit's work; a re-invocation with
     the same ``out_dir`` skips manifest-committed buckets and reprocesses
@@ -879,50 +931,50 @@ def _run_checkpointed_locked(spark, docs, fs, lease, n_buckets, catalog,
             .withColumn('bucket', F.pmod(F.xxhash64('url'),
                                          F.lit(n_buckets)).cast('int'))
             .persist())
+        try:
+            # per-bucket lineage metrics (≤ |group| small rows collected)
+            # first: the cheapest job that fills the cache the writes
+            # read. A bucket without documents keeps its zeros, so
+            # it is still done
+            zeros = {'n_docs': 0, 'n_statements': 0, 'n_edges': 0,
+                     'n_warnings': 0}
+            metrics = {str(b): dict(zeros) for b in group}
+            for r in parsed.groupBy('bucket').agg(
+                    F.count('*').alias('n_docs'),
+                    F.sum('n_statements').alias('n_statements'),
+                    F.sum('n_edges').alias('n_edges'),
+                    F.sum(F.size('warnings')).alias('n_warnings')).collect():
+                metrics[str(r['bucket'])] = {k: r[k] for k in zeros}
 
-        # each Python task emitted a node or edge once, but tasks overlap
-        nodes = (parsed.select('bucket', F.explode('nodes').alias('n'))
-                 .select('bucket', 'n.*').dropDuplicates(['node_id']))
-        edges = (parsed.select('bucket', 'url', F.explode('edges').alias('e'))
-                 .select('bucket', 'url', 'e.*').dropDuplicates(['edge_id']))
-        # warnings have no content key; urls are bucket-disjoint, so groups
-        # can never overlap — no dedup needed
-        warnings = (parsed.select('bucket', 'url',
-                                  F.explode('warnings').alias('w'))
-                    .select('bucket', 'url', 'w.*'))
+            # each Python task emitted a node or edge once, but tasks
+            # overlap
+            nodes = (parsed.select('bucket', F.explode('nodes').alias('n'))
+                     .select('bucket', 'n.*').dropDuplicates(['node_id']))
+            edges = (parsed.select('bucket', 'url',
+                                   F.explode('edges').alias('e'))
+                     .select('bucket', 'url', 'e.*')
+                     .dropDuplicates(['edge_id']))
+            # warnings have no content key; urls are bucket-disjoint, so
+            # groups can never overlap — no dedup needed
+            warnings = (parsed.select('bucket', 'url',
+                                      F.explode('warnings').alias('w'))
+                        .select('bucket', 'url', 'w.*'))
 
-        old_nodes = _committed_paths(fs, manifest, 'nodes')
-        if old_nodes:
-            nodes = nodes.join(
-                spark.read.parquet(*old_nodes).select('node_id'),
-                on='node_id', how='left_anti')
-        old_edges = _committed_paths(fs, manifest, 'edges')
-        if old_edges:
-            edges = edges.join(
-                spark.read.parquet(*old_edges).select('edge_id'),
-                on='edge_id', how='left_anti')
+            old_nodes = _committed_paths(fs, manifest, 'nodes')
+            if old_nodes:
+                nodes = nodes.join(
+                    _read_table(spark, 'nodes', old_nodes).select('node_id'),
+                    on='node_id', how='left_anti')
+            old_edges = _committed_paths(fs, manifest, 'edges')
+            if old_edges:
+                edges = edges.join(
+                    _read_table(spark, 'edges', old_edges).select('edge_id'),
+                    on='edge_id', how='left_anti')
 
-        tables = {}
-        for table, df in (('nodes', nodes), ('edges', edges),
-                          ('warnings', warnings)):
-            path = fs._full(table, cid)
-            df.write.mode('overwrite').parquet(path)
-            # an all-duplicates unit writes zero part files; record that so
-            # readers never scan a schema-less empty dir
-            tables[table] = any(fs.part_files(table, cid))
-
-        # per-bucket lineage metrics (≤ |group| small rows to the driver);
-        # a bucket without documents keeps its zeros, so it is still done
-        zeros = {'n_docs': 0, 'n_statements': 0, 'n_edges': 0,
-                 'n_warnings': 0}
-        metrics = {str(b): dict(zeros) for b in group}
-        for r in parsed.groupBy('bucket').agg(
-                F.count('*').alias('n_docs'),
-                F.sum('n_statements').alias('n_statements'),
-                F.sum('n_edges').alias('n_edges'),
-                F.sum(F.size('warnings')).alias('n_warnings')).collect():
-            metrics[str(r['bucket'])] = {k: r[k] for k in zeros}
-        parsed.unpersist()
+            tables = _write_tables(spark, fs, cid, {
+                'nodes': nodes, 'edges': edges, 'warnings': warnings})
+        finally:
+            parsed.unpersist()
 
         # publish: fencing check + atomic swap is the commit point
         lease.renew()
@@ -984,22 +1036,21 @@ def _compact_output_locked(spark, fs, lease) -> dict:
     def n_part_files(table, cid):
         return sum(1 for _ in fs.part_files(table, cid))
 
-    stats = {}
-    tables = {}
+    frames = {}
+    files_before = {}
     for table in _TABLES:
         paths = _committed_paths(fs, manifest, table)
-        out_path = fs._full(table, new_cid)
         if paths:
-            df = spark.read.parquet(*paths)
-            files_before = sum(
+            frames[table] = _read_table(spark, table, paths) \
+                .repartition(F.col('bucket')).sortWithinPartitions('bucket')
+            files_before[table] = sum(
                 n_part_files(table, c['commit_id'])
                 for c in manifest['commits'] if c['tables'].get(table))
-            df.repartition(F.col('bucket')).sortWithinPartitions('bucket') \
-                .write.mode('overwrite').parquet(out_path)
-            files_after = n_part_files(table, new_cid)
-            stats[table] = {'files_before': files_before,
-                            'files_after': files_after}
-        tables[table] = bool(paths) and any(fs.part_files(table, new_cid))
+    written = _write_tables(spark, fs, new_cid, frames)
+    stats = {table: {'files_before': n,
+                     'files_after': n_part_files(table, new_cid)}
+             for table, n in files_before.items()}
+    tables = {table: written.get(table, False) for table in _TABLES}
 
     merged_metrics = {}
     all_buckets = []
@@ -1025,27 +1076,16 @@ def _compact_output_locked(spark, fs, lease) -> dict:
 def read_graph(spark, out_dir: str) -> dict:
     """Read back a checkpointed run. No read-time dedup is needed: the
     manifest references only MERGE-committed, duplicate-free data."""
-    from pyspark.sql.types import IntegerType, StringType, StructField, \
-        StructType
-
     fs = _OutputFS(spark, out_dir)
     manifest = _read_manifest(fs)
     if not manifest['commits']:
         raise ValueError('no committed data under {}'.format(out_dir))
 
-    def empty(name):
-        elem = PARSED_SCHEMA[name].dataType.elementType
-        fields = [StructField('bucket', IntegerType(), True)]
-        if name != 'nodes':
-            fields.append(StructField('url', StringType(), True))
-        return spark.createDataFrame(
-            [], StructType(fields + list(elem.fields)))
-
     def table(name):
         paths = _committed_paths(fs, manifest, name)
-        if not paths:
-            return empty(name)  # e.g. a warning-free corpus
-        return spark.read.parquet(*paths)
+        if not paths:  # e.g. a warning-free corpus
+            return spark.createDataFrame([], COMMITTED_TABLE_SCHEMAS[name])
+        return _read_table(spark, name, paths)
 
     edges = table('edges')
     return {'nodes': table('nodes'), 'edges': edges,

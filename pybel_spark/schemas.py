@@ -87,6 +87,20 @@ COMMIT_PARSED_SCHEMA = StructType([
     PARSED_SCHEMA['warnings'],
 ])
 
+
+def _committed_table(name):
+    fields = [StructField('bucket', IntegerType(), True)]
+    if name != 'nodes':
+        fields.append(StructField('url', StringType(), True))
+    return StructType(fields + PARSED_SCHEMA[name].dataType.elementType.fields)
+
+
+#: the committed tables of ``run_checkpointed`` (``<table>/<commit_id>/``
+#: parquet): ``bucket``, then ``url`` except for nodes, then the element
+#: fields; given to every read so no read infers the schema from a footer
+COMMITTED_TABLE_SCHEMAS = {name: _committed_table(name)
+                           for name in ('nodes', 'edges', 'warnings')}
+
 TRIPLES_SCHEMA = StructType([
     StructField('subject', StringType(), False),
     StructField('predicate', StringType(), False),

@@ -1,3 +1,4 @@
+import contextlib
 import json
 import os
 
@@ -39,3 +40,23 @@ def spark():
     from pybel_spark.session import get_spark
     spark = get_spark(app_name='pybel-spark-tests', cores=4, shuffle_partitions=8)
     yield spark
+
+
+def job_ids(spark, group):
+    """Ids of the Spark jobs the status store holds for job ``group``
+    (``None``: jobs without one), once the listener bus has delivered every
+    event posted so far."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@contextlib.contextmanager
+def job_group(spark, group):
+    """Run the block's Spark jobs under job ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty('spark.jobGroup.id', None)

@@ -9,6 +9,8 @@ from pybel_spark.corpus import CorpusSpec, generate_documents, wrap_html
 from pybel_spark.pipeline import extract_triples_deduped
 from pybel_spark.schemas import DOCUMENTS_SCHEMA
 
+from .conftest import job_group, job_ids
+
 N_DOCS = 80
 
 
@@ -52,6 +54,27 @@ def test_incremental_equals_full_recompute(spark, docs, tmp_path):
     stats = PI.parse_index_stats(spark, path)
     assert stats['keys'] == m1['batch_keys'] + m2['novel_keys']
     assert stats['distinct_triples'] == len(want)
+
+
+def test_index_reads_know_their_schema(spark, docs, tmp_path):
+    """The ``keys/`` and ``triples/`` schemas the index reads with launch
+    no Spark job (no footer is read to infer them), and each read equals
+    the schema-inferring read."""
+    from pybel_spark.pipeline import _KEYED_TRIPLES_SCHEMA
+
+    path = str(tmp_path / 'pidx_schema')
+    PI.parse_index_write(docs, path)
+    schemas = {'keys': PI._KEYS_SCHEMA, 'triples': _KEYED_TRIPLES_SCHEMA}
+    with job_group(spark, 'index-read'):
+        known = {sub: spark.read.schema(schema).parquet(path + '/' + sub)
+                 for sub, schema in schemas.items()}
+        PI.triples_from_index(spark, path)
+    assert job_ids(spark, 'index-read') == set()
+    for sub, df in known.items():
+        inferred = spark.read.parquet(path + '/' + sub)
+        assert df.schema == inferred.schema, sub
+        assert sorted(map(tuple, df.collect())) \
+            == sorted(map(tuple, inferred.collect())), sub
 
 
 def test_incremental_convenience_bootstraps_and_updates(spark, docs,

@@ -7,9 +7,11 @@ import pytest
 
 from pybel_spark.corpus import CorpusSpec, extract_text, generate_documents, wrap_html
 from pybel_spark.pipeline import (
-    build_graph, extract_triples, mask_non_bel_lines, read_graph,
-    run_checkpointed,
+    build_graph, compact_output, extract_triples, mask_non_bel_lines,
+    read_graph, run_checkpointed,
 )
+
+from .conftest import job_group, job_ids
 
 N_DOCS = 150
 
@@ -344,6 +346,126 @@ def test_checkpointed_graph_equals_build_graph(spark):
         ref.parsed.unpersist()
     finally:
         docs.unpersist()
+        shutil.rmtree(out_dir, ignore_errors=True)
+
+
+def test_checkpointed_jobs_carry_the_callers_job_group(spark, docs):
+    """Every Spark job of ``run_checkpointed`` and ``compact_output``,
+    the table writes its threads run included, carries the job
+    group the caller set."""
+    out_dir = tempfile.mkdtemp(prefix='pybel_spark_group_')
+    try:
+        floor = max(job_ids(spark, None), default=-1)
+        with job_group(spark, 'graph-commit'):
+            run_checkpointed(spark, docs, out_dir, n_buckets=4,
+                             commit_groups=2)
+            compact_output(spark, out_dir)
+        # 2 commit groups × (lineage + 3 writes) + 3 compaction rewrites
+        assert len(job_ids(spark, 'graph-commit')) >= 11
+        assert {j for j in job_ids(spark, None) if j > floor} == set()
+    finally:
+        shutil.rmtree(out_dir, ignore_errors=True)
+
+
+def test_checkpointed_without_pinned_threads(spark, docs, spec,
+                                            monkeypatch):
+    """Where py4j does not pin Python threads to JVM threads
+    (PYSPARK_PIN_THREAD=false), ``inheritable_thread_target(spark)``
+    returns its argument; the table writes still run."""
+    import pybel_spark.pipeline as P
+
+    monkeypatch.setattr(P, 'inheritable_thread_target', lambda f=None: f)
+    out_dir = tempfile.mkdtemp(prefix='pybel_spark_unpinned_')
+    try:
+        r = run_checkpointed(spark, docs, out_dir, n_buckets=2)
+        assert r == {'skipped_buckets': 0, 'processed_buckets': 2}
+        assert {tuple(t) for t in read_graph(spark, out_dir)['triples']
+                .collect()} == expected_triples(spec, N_DOCS)
+    finally:
+        shutil.rmtree(out_dir, ignore_errors=True)
+
+
+def test_failed_table_write_publishes_nothing(spark, docs, spec,
+                                              monkeypatch):
+    """A commit group whose edges write fails: ``run_checkpointed`` raises
+    only once that group's nodes and warnings writes have finished, and
+    leaves the manifest as the earlier group committed it, no writer lock
+    and no cached parse. A rerun commits the rest."""
+    import json
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    out_dir = tempfile.mkdtemp(prefix='pybel_spark_fail_')
+    mpath = os.path.join(out_dir, 'MANIFEST.json')
+    write = DataFrameWriter.parquet
+    failed = {}
+    finished = []
+
+    def parquet(self, path, *args, **kwargs):
+        table, cid = os.path.basename(os.path.dirname(path)), \
+            os.path.basename(path)
+        if table == 'edges' and os.path.exists(mpath):
+            with open(mpath, 'rb') as f:
+                failed.update(cid=cid, manifest=f.read())
+            raise RuntimeError('injected edges write failure')
+        write(self, path, *args, **kwargs)
+        finished.append((table, cid))
+
+    sc = spark.sparkContext
+    n_cached = sc._jsc.getPersistentRDDs().size()
+    try:
+        monkeypatch.setattr(DataFrameWriter, 'parquet', parquet)
+        with pytest.raises(RuntimeError, match='injected'):
+            run_checkpointed(spark, docs, out_dir, n_buckets=4,
+                             commit_groups=2)
+        assert sc.statusTracker().getActiveJobsIds() == []
+        assert {('nodes', failed['cid']),
+                ('warnings', failed['cid'])} <= set(finished)
+        with open(mpath, 'rb') as f:
+            assert f.read() == failed['manifest']
+        assert len(json.loads(failed['manifest'])['commits']) == 1
+        assert not os.path.exists(os.path.join(out_dir, 'WRITER.lock'))
+        assert sc._jsc.getPersistentRDDs().size() == n_cached
+
+        monkeypatch.undo()
+        r = run_checkpointed(spark, docs, out_dir, n_buckets=4,
+                             commit_groups=2)
+        assert r == {'skipped_buckets': 2, 'processed_buckets': 2}
+        graph = read_graph(spark, out_dir)
+        assert graph['edges'].count() \
+            == graph['edges'].select('edge_id').distinct().count()
+        assert {tuple(t) for t in graph['triples'].collect()} \
+            == expected_triples(spec, N_DOCS)
+    finally:
+        shutil.rmtree(out_dir, ignore_errors=True)
+
+
+def test_committed_reads_know_their_schema(spark, docs):
+    """``read_graph`` launches no Spark job (no footer is read to infer a
+    schema), and each table equals the schema-inferring read of the same
+    commits."""
+    from pybel_spark.pipeline import (_committed_paths, _OutputFS,
+                                      _read_manifest)
+
+    out_dir = tempfile.mkdtemp(prefix='pybel_spark_schema_')
+    try:
+        run_checkpointed(spark, docs, out_dir, n_buckets=4, commit_groups=2)
+        with job_group(spark, 'read-graph'):
+            graph = read_graph(spark, out_dir)
+        assert job_ids(spark, 'read-graph') == set()
+
+        fs = _OutputFS(spark, out_dir)
+        manifest = _read_manifest(fs)
+        for table in ('nodes', 'edges', 'warnings'):
+            inferred = spark.read.parquet(
+                *_committed_paths(fs, manifest, table))
+            assert graph[table].schema == inferred.schema, table
+            assert _json_rows(r.asDict(recursive=True)
+                              for r in graph[table].collect()) \
+                == _json_rows(r.asDict(recursive=True)
+                              for r in inferred.collect()), table
+    finally:
         shutil.rmtree(out_dir, ignore_errors=True)
 
 
