@@ -18,13 +18,17 @@ algebra:
   redistribution (same semantics as ``networkx.pagerank`` with a fixed
   iteration count). Each round is one equi-join + hash aggregate on the
   uniform node id; the dangling mass is a 1-row aggregate cross-joined
-  back (never collected to the driver), and ``localCheckpoint`` truncates
-  the per-round lineage so the plan stays flat at any iteration count.
+  back (never collected to the driver).
+
+Every iterative operator here runs its rounds through
+:class:`~pybel_spark.ops.graph.Rounds`, which owns checkpointing, the
+round cap, plan capture and the release of cached side tables.
 """
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from .graph import KG, adjacency_table, dump_plan
+from .graph import (KG, Rounds, adjacency_table, checkpoint, count_settled,
+                    is_empty, none_changed, union_layers)
 
 
 def synthetic_skewed_graph(spark, n_nodes: int, avg_out_degree: int = 8,
@@ -232,22 +236,17 @@ def k_core(graph: KG, k: int = 2, max_rounds: int = 50) -> DataFrame:
 
     Iterative peel: drop nodes below k, recompute degrees on the surviving
     edge set, repeat to fixpoint. Each round is one degree aggregate + two
-    semi-joins on the uniform node id; localCheckpoint truncates lineage
-    so round N's plan equals round 1's. Converges in <= initial-max-degree
+    semi-joins on the uniform node id. Converges in <= initial-max-degree
     rounds; in practice a handful — raises if ``max_rounds`` is exhausted
     before the fixpoint (silent non-convergence would be silently-wrong
     results, the ops/components.py lesson).
     """
-    pairs = undirected_pairs(graph.edges).localCheckpoint(eager=True)
-    n_pairs = pairs.count()
-    for _ in range(max_rounds):
-        if n_pairs == 0:
-            break
+    def peel(pairs, _):
         keep = (_pair_degrees(pairs).where(F.col('degree') >= k)
                 .select('node_id'))
         # merge-pinned per-round semi-joins (same rationale as the
         # PageRank rank table: 'keep' is O(n) and fresh each peel round)
-        pairs = (
+        return (
             pairs
             .hint('merge')
             .join(keep.select(F.col('node_id').alias('a')),
@@ -255,15 +254,10 @@ def k_core(graph: KG, k: int = 2, max_rounds: int = 50) -> DataFrame:
             .hint('merge')
             .join(keep.select(F.col('node_id').alias('b')),
                   on='b', how='leftsemi')
-            .localCheckpoint(eager=True)
         )
-        n_now = pairs.count()
-        if n_now == n_pairs:
-            break
-        n_pairs = n_now
-    else:
-        raise RuntimeError(
-            'k_core did not converge within max_rounds=%d' % max_rounds)
+
+    pairs = Rounds.run('k_core', undirected_pairs(graph.edges), peel,
+                       max_rounds, until=count_settled())
     return (
         pairs.select(F.col('a').alias('node_id'))
         .unionByName(pairs.select(F.col('b').alias('node_id')))
@@ -382,82 +376,83 @@ def _power_iteration(graph: KG, teleport: DataFrame, damping: float,
     """
     n_part = int(graph.edges.sparkSession.conf.get(
         'spark.sql.shuffle.partitions'))
-    if weight_col is None:
-        adj = (adjacency_table(graph.edges, key_col='source_id')
-               .withColumn('outdeg', F.size('nbrs'))
-               .persist())
-    else:
-        adj = (graph.edges
-               .groupBy('source_id', 'target_id')
-               .agg(F.sum(F.col(weight_col)).cast('double').alias('_w'))
-               .groupBy('source_id')
-               .agg(F.collect_list(F.struct('target_id', '_w')).alias('nbrs'),
-                    F.sum('_w').alias('outdeg'))
-               .repartition(n_part, 'source_id')
-               .sortWithinPartitions('source_id')
-               .persist())
-    # teleport joins ranks EVERY round — cache it pre-partitioned+sorted on
-    # the join key so its side of the merge join is exchange- and sort-free
-    # (same contract as the adjacency table; guide §2.4 "share one
-    # exchange"). The values are unchanged, only the cached layout.
-    teleport = (teleport.repartition(n_part, 'node_id')
-                .sortWithinPartitions('node_id').persist())
-    # the dangling node SET is static across rounds — only its rank mass
-    # changes; one anti-join here replaces a ranks-vs-outdeg anti-join
-    # shuffle inside every iteration
-    dangling_ids = (
-        teleport.select('node_id')
-        .join(adj.select(F.col('source_id').alias('node_id')),
-              on='node_id', how='leftanti')
-        .repartition(n_part, 'node_id').sortWithinPartitions('node_id')
-        .persist()
-    )
-
-    ranks = teleport.select(
-        'node_id', F.col('p').alias('rank')).localCheckpoint(eager=True)
-    for _ in range(n_iterations):
-        # rank/adjacency joins are pinned to SORT-MERGE: at web scale both
-        # sides are corpus-sized, and re-broadcasting a fresh O(n) rank
-        # table EVERY round (what a size-threshold decision picks once
-        # n×16B fits the limit) pays driver collect + fan-out per
-        # iteration — measured +50% on the 4M-edge bench graph
-        joined = adj.hint('merge').join(
-            ranks.withColumnRenamed('node_id', 'source_id'),
-            on='source_id')
+    with Rounds() as rounds:
         if weight_col is None:
-            exploded = joined.select(
-                F.explode('nbrs').alias('node_id'),
-                (F.col('rank') / F.col('outdeg')).alias('_share'))
+            adj = rounds.cache(
+                adjacency_table(graph.edges, key_col='source_id')
+                .withColumn('outdeg', F.size('nbrs')))
         else:
-            exploded = (
-                joined.select('rank', 'outdeg',
-                              F.explode('nbrs').alias('_nb'))
-                .select(F.col('_nb.target_id').alias('node_id'),
-                        (F.col('rank') * F.col('_nb._w')
-                         / F.col('outdeg')).alias('_share')))
-        contribs = exploded.groupBy('node_id').agg(
-            F.sum('_share').alias('contrib'))
-        dangling = (
-            ranks.hint('merge').join(dangling_ids, on='node_id',
-                                     how='leftsemi')
-            .agg(F.coalesce(F.sum('rank'), F.lit(0.0)).alias('dangling_mass'))
-        )
-        new_ranks = (
-            teleport.hint('merge').join(contribs, on='node_id', how='left')
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                'node_id',
-                (F.lit(1.0 - damping) * F.col('p')
-                 + F.lit(damping)
-                 * (F.coalesce('contrib', F.lit(0.0))
-                    + F.col('dangling_mass') * F.col('p'))).alias('rank'))
-        )
-        dump_plan(new_ranks, 'round_pagerank')
-        ranks = new_ranks.localCheckpoint(eager=True)
-    adj.unpersist()
-    dangling_ids.unpersist()
-    teleport.unpersist()
-    return ranks
+            adj = rounds.cache(
+                graph.edges
+                .groupBy('source_id', 'target_id')
+                .agg(F.sum(F.col(weight_col)).cast('double').alias('_w'))
+                .groupBy('source_id')
+                .agg(F.collect_list(F.struct('target_id', '_w'))
+                     .alias('nbrs'),
+                     F.sum('_w').alias('outdeg'))
+                .repartition(n_part, 'source_id')
+                .sortWithinPartitions('source_id'))
+        # teleport joins ranks EVERY round — cache it pre-partitioned+sorted
+        # on the join key so its side of the merge join is exchange- and
+        # sort-free (same contract as the adjacency table; guide §2.4
+        # "share one exchange"). The values are unchanged, only the cached
+        # layout.
+        teleport = rounds.cache(teleport.repartition(n_part, 'node_id')
+                                .sortWithinPartitions('node_id'))
+        # the dangling node SET is static across rounds — only its rank mass
+        # changes; one anti-join here replaces a ranks-vs-outdeg anti-join
+        # shuffle inside every iteration
+        dangling_ids = rounds.cache(
+            teleport.select('node_id')
+            .join(adj.select(F.col('source_id').alias('node_id')),
+                  on='node_id', how='leftanti')
+            .repartition(n_part, 'node_id').sortWithinPartitions('node_id'))
+
+        def step(ranks, _):
+            # rank/adjacency joins are pinned to SORT-MERGE: at web scale
+            # both sides are corpus-sized, and re-broadcasting a fresh O(n)
+            # rank table EVERY round (what a size-threshold decision picks
+            # once n×16B fits the limit) pays driver collect + fan-out per
+            # iteration — measured +50% on the 4M-edge bench graph
+            joined = adj.hint('merge').join(
+                ranks.withColumnRenamed('node_id', 'source_id'),
+                on='source_id')
+            if weight_col is None:
+                exploded = joined.select(
+                    F.explode('nbrs').alias('node_id'),
+                    (F.col('rank') / F.col('outdeg')).alias('_share'))
+            else:
+                exploded = (
+                    joined.select('rank', 'outdeg',
+                                  F.explode('nbrs').alias('_nb'))
+                    .select(F.col('_nb.target_id').alias('node_id'),
+                            (F.col('rank') * F.col('_nb._w')
+                             / F.col('outdeg')).alias('_share')))
+            contribs = exploded.groupBy('node_id').agg(
+                F.sum('_share').alias('contrib'))
+            dangling = (
+                ranks.hint('merge').join(dangling_ids, on='node_id',
+                                         how='leftsemi')
+                .agg(F.coalesce(F.sum('rank'), F.lit(0.0))
+                     .alias('dangling_mass'))
+            )
+            return (
+                teleport.hint('merge').join(contribs, on='node_id',
+                                            how='left')
+                .crossJoin(F.broadcast(dangling))
+                .select(
+                    'node_id',
+                    (F.lit(1.0 - damping) * F.col('p')
+                     + F.lit(damping)
+                     * (F.coalesce('contrib', F.lit(0.0))
+                        + F.col('dangling_mass') * F.col('p')))
+                    .alias('rank'))
+            )
+
+        return rounds.run('pagerank',
+                          teleport.select('node_id',
+                                          F.col('p').alias('rank')),
+                          step, n_iterations)
 
 
 def hits(graph: KG, n_iterations: int = 10) -> DataFrame:
@@ -482,8 +477,7 @@ def hits(graph: KG, n_iterations: int = 10) -> DataFrame:
 
     Scale: per round, two equi-join + partial-agg exchanges keyed by
     node; sparse state (nodes with zero score carry no rows — absent and
-    0 contribute identically to the sums); hubs are eagerly
-    localCheckpoint-ed so round-N's plan stays flat. Nodes without
+    0 contribute identically to the sums). Nodes without
     in-(out-)edges surface with auth (hub) 0 in the final left join; a
     graph with no edges yields all-zero scores (NULL normalizer caught by
     the outer coalesce). As in :func:`_power_iteration`, each direction's
@@ -493,75 +487,72 @@ def hits(graph: KG, n_iterations: int = 10) -> DataFrame:
     the explode feeding the map-side partial agg — identical sums, 4×
     fewer sorted rows per half-round on the 4M-edge bench graph.
     """
-    nodes = graph.nodes.select('node_id').distinct().persist()
-    # one persisted distinct pass feeds BOTH adjacency builds — without
-    # it the O(edges) dedup shuffle runs twice (code-review this round)
-    edges = graph.edges.select('source_id', 'target_id').distinct() \
-        .persist()
-    out_adj = adjacency_table(edges, key_col='source_id',
-                              dedup=False).persist()
-    in_adj = adjacency_table(edges, src='target_id', dst='source_id',
-                             key_col='target_id', out_col='srcs',
-                             dedup=False).persist()
-    n = nodes.count()
-    if n == 0:
-        return nodes.select(
-            'node_id', F.lit(0.0).alias('auth'), F.lit(0.0).alias('hub'))
-    hubs = nodes.select(
-        'node_id', F.lit(1.0 / n).alias('hub')).localCheckpoint(eager=True)
-    auths = nodes.select('node_id', F.lit(0.0).alias('auth'))
-    for i in range(n_iterations):
-        # merge-pinned like _power_iteration: never re-broadcast an O(n)
-        # score table per half-round
-        auths = (
-            out_adj.hint('merge')
-            .join(hubs.withColumnRenamed('node_id', 'source_id'),
-                  on='source_id')
-            .select(F.explode('nbrs').alias('node_id'), 'hub')
-            .groupBy('node_id')
-            .agg(F.sum('hub').alias('auth'))
+    with Rounds() as rounds:
+        nodes = rounds.cache(graph.nodes.select('node_id').distinct())
+        # one cached distinct pass feeds BOTH adjacency builds — without
+        # it the O(edges) dedup shuffle runs twice
+        edges = rounds.cache(
+            graph.edges.select('source_id', 'target_id').distinct())
+        out_adj = rounds.cache(adjacency_table(edges, key_col='source_id',
+                                               dedup=False))
+        in_adj = rounds.cache(adjacency_table(
+            edges, src='target_id', dst='source_id', key_col='target_id',
+            out_col='srcs', dedup=False))
+        n = nodes.count()
+        if n == 0:
+            return nodes.select(
+                'node_id', F.lit(0.0).alias('auth'), F.lit(0.0).alias('hub'))
+        auths = nodes.select('node_id', F.lit(0.0).alias('auth'))
+
+        def step(hubs, r):
+            nonlocal auths
+            # merge-pinned like _power_iteration: never re-broadcast an
+            # O(n) score table per half-round
+            auths = (
+                out_adj.hint('merge')
+                .join(hubs.withColumnRenamed('node_id', 'source_id'),
+                      on='source_id')
+                .select(F.explode('nbrs').alias('node_id'), 'hub')
+                .groupBy('node_id')
+                .agg(F.sum('hub').alias('auth'))
+            )
+            # checkpoint only on the final round (auths otherwise feeds
+            # exactly one consumer — the hub update — whose own checkpoint
+            # materializes it)
+            if r == n_iterations:
+                auths = checkpoint(auths)
+            return (
+                in_adj.hint('merge')
+                .join(auths.withColumnRenamed('node_id', 'target_id'),
+                      on='target_id')
+                .select(F.explode('srcs').alias('node_id'), 'auth')
+                .groupBy('node_id')
+                .agg(F.sum('auth').alias('hub'))
+            )
+
+        hubs = rounds.run('hits', nodes.select(
+            'node_id', F.lit(1.0 / n).alias('hub')), step, n_iterations)
+        asum = auths.agg(F.sum('auth').alias('s'))
+        hsum = hubs.agg(F.sum('hub').alias('s'))
+        auths_n = (
+            auths.crossJoin(F.broadcast(asum))
+            .select('node_id',
+                    F.coalesce(F.col('auth') / F.col('s'), F.lit(0.0))
+                    .alias('auth'))
         )
-        # checkpoint only on the final round (auths otherwise feeds
-        # exactly one consumer — the hub update — whose own checkpoint
-        # materializes it)
-        if i == n_iterations - 1:
-            auths = auths.localCheckpoint(eager=True)
-        new_hubs = (
-            in_adj.hint('merge')
-            .join(auths.withColumnRenamed('node_id', 'target_id'),
-                  on='target_id')
-            .select(F.explode('srcs').alias('node_id'), 'auth')
-            .groupBy('node_id')
-            .agg(F.sum('auth').alias('hub'))
+        hubs_n = (
+            hubs.crossJoin(F.broadcast(hsum))
+            .select('node_id',
+                    F.coalesce(F.col('hub') / F.col('s'), F.lit(0.0))
+                    .alias('hub'))
         )
-        dump_plan(new_hubs, 'round_hits')
-        hubs = new_hubs.localCheckpoint(eager=True)
-    asum = auths.agg(F.sum('auth').alias('s'))
-    hsum = hubs.agg(F.sum('hub').alias('s'))
-    auths_n = (
-        auths.crossJoin(F.broadcast(asum))
-        .select('node_id',
-                F.coalesce(F.col('auth') / F.col('s'), F.lit(0.0))
-                .alias('auth'))
-    )
-    hubs_n = (
-        hubs.crossJoin(F.broadcast(hsum))
-        .select('node_id',
-                F.coalesce(F.col('hub') / F.col('s'), F.lit(0.0))
-                .alias('hub'))
-    )
-    out = (
-        nodes.join(auths_n, on='node_id', how='left')
-        .join(hubs_n, on='node_id', how='left')
-        .select('node_id',
-                F.coalesce('auth', F.lit(0.0)).alias('auth'),
-                F.coalesce('hub', F.lit(0.0)).alias('hub'))
-    )
-    nodes.unpersist()
-    edges.unpersist()
-    out_adj.unpersist()
-    in_adj.unpersist()
-    return out
+        return (
+            nodes.join(auths_n, on='node_id', how='left')
+            .join(hubs_n, on='node_id', how='left')
+            .select('node_id',
+                    F.coalesce('auth', F.lit(0.0)).alias('auth'),
+                    F.coalesce('hub', F.lit(0.0)).alias('hub'))
+        )
 
 
 def sample_neighbors(graph: KG, fanout: int = 10,
@@ -601,18 +592,7 @@ def weighted_shortest_paths(graph: KG, cost_col: str, sources,
     negative-cycle detection); sums accumulate left-to-right along each
     path so the DuckDB mirror reproduces them bit-for-bit.
     """
-    edges = (
-        graph.edges
-        .select('source_id', 'target_id',
-                F.col(cost_col).cast('double').alias('cost'))
-        .groupBy('source_id', 'target_id')
-        .agg(F.min('cost').alias('cost'))
-        .persist())
-    dist = sources.select(
-        F.col(sources.columns[0]).alias('origin')).distinct().select(
-        'origin', F.col('origin').alias('node_id'),
-        F.lit(0.0).alias('dist')).localCheckpoint(eager=True)
-    for _ in range(max_rounds):
+    def relax(dist, _):
         cand = (
             dist.hint('merge')
             .join(edges.withColumnRenamed('source_id', 'node_id'),
@@ -620,26 +600,32 @@ def weighted_shortest_paths(graph: KG, cost_col: str, sources,
             .select('origin', F.col('target_id').alias('node_id'),
                     (F.col('dist') + F.col('cost')).alias('dist'))
         )
-        new_dist = (
-            dist.unionByName(cand)
-            .groupBy('origin', 'node_id')
-            .agg(F.min('dist').alias('dist'))
-            .localCheckpoint(eager=True)
-        )
-        improved = (
+        return (dist.unionByName(cand)
+                .groupBy('origin', 'node_id')
+                .agg(F.min('dist').alias('dist')))
+
+    def none_improved(dist, new_dist):
+        return (
             new_dist.hint('merge').join(
                 dist.select('origin', 'node_id',
                             F.col('dist').alias('old')),
                 on=['origin', 'node_id'], how='left')
             .where(F.col('old').isNull() | (F.col('dist') < F.col('old')))
-            .count())
-        dist = new_dist
-        if improved == 0:
-            edges.unpersist()
-            return dist
-    raise RuntimeError(
-        'weighted_shortest_paths did not converge within max_rounds=%d'
-        % max_rounds)
+            .count() == 0)
+
+    with Rounds() as rounds:
+        edges = rounds.cache(
+            graph.edges
+            .select('source_id', 'target_id',
+                    F.col(cost_col).cast('double').alias('cost'))
+            .groupBy('source_id', 'target_id')
+            .agg(F.min('cost').alias('cost')))
+        return rounds.run(
+            'weighted_shortest_paths',
+            sources.select(F.col(sources.columns[0]).alias('origin'))
+            .distinct().select('origin', F.col('origin').alias('node_id'),
+                               F.lit(0.0).alias('dist')),
+            relax, max_rounds, until=none_improved)
 
 
 def _walk_starts(nodes: DataFrame, walks_per_node: int) -> DataFrame:
@@ -691,35 +677,31 @@ def random_walks(graph: KG, walk_length: int = 5, walks_per_node: int = 1,
     unchanged), and each step is then ONE merge-pinned equi-join keyed
     by the current node plus an element_at — half the exchanges of the
     earlier (outdeg, then (source, rank)) two-join round. Shuffle size
-    stays O(active walks), never O(edges); localCheckpoint keeps step
-    t's plan flat. Hub skew is bounded: a walk visits ONE neighbor
+    stays O(active walks), never O(edges). Hub skew is bounded: a walk
+    visits ONE neighbor
     regardless of outdeg (the adjacency row of a 10^6-out-link
     directory page is megabytes — large but a single row, and only
     walk-visited nodes' rows are ever shuffled).
     """
-    adj = adjacency_table(graph.edges, key_col='node',
-                          sort=True).persist()
-    cur = _walk_starts(graph.nodes, walks_per_node).select(
-        'walk_id', 'node', F.lit(0).alias('step')).localCheckpoint(eager=True)
-    levels = [cur]
-    for t in range(1, walk_length + 1):
-        # merge-pinned: the walk frontier is O(walks) and fresh per
-        # step — a size-threshold broadcast would re-ship it every step
-        stepped = (
-            cur.hint('merge')
-            .join(adj, on='node')
-            .select('walk_id',
-                    _uniform_pick(_walk_draw_key(seed, t)).alias('node'),
-                    F.lit(t).alias('step'))
-        )
-        dump_plan(stepped, 'round_walks')
-        cur = stepped.localCheckpoint(eager=True)
-        levels.append(cur)
-    out = levels[0]
-    for lvl in levels[1:]:
-        out = out.unionByName(lvl)
-    adj.unpersist()
-    return out
+    with Rounds() as rounds:
+        adj = rounds.cache(adjacency_table(graph.edges, key_col='node',
+                                           sort=True))
+
+        def step(levels, t):
+            # merge-pinned: the walk frontier is O(walks) and fresh per
+            # step — a size-threshold broadcast would re-ship it every step
+            return (
+                levels[-1].hint('merge')
+                .join(adj, on='node')
+                .select('walk_id',
+                        _uniform_pick(_walk_draw_key(seed, t)).alias('node'),
+                        F.lit(t).alias('step'))
+            )
+
+        return union_layers(rounds.run(
+            'walks', _walk_starts(graph.nodes, walks_per_node).select(
+                'walk_id', 'node', F.lit(0).alias('step')),
+            step, walk_length, layers=True))
 
 
 def node2vec_walks(graph: KG, walk_length: int = 5, walks_per_node: int = 1,
@@ -760,71 +742,66 @@ def node2vec_walks(graph: KG, walk_length: int = 5, walks_per_node: int = 1,
     here: at true web scale a bloom/sorted-probe per candidate would cap
     the inner scan; out-deg 8-ish corpora never see it).
     """
-    adj = adjacency_table(graph.edges, key_col='node',
-                          sort=True).persist()
-
-    cur = _walk_starts(graph.nodes, walks_per_node).select(
-        'walk_id', 'node', F.lit(0).alias('step')).localCheckpoint(eager=True)
-    levels = [cur.select('walk_id', 'node', 'step')]
     inv_p, inv_q = 1.0 / p, 1.0 / q
-    for t in range(1, walk_length + 1):
+
+    def step(levels, t):
         key = _walk_draw_key(seed, t)
-        u01 = (F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast('double')
-               / F.lit(float(2 ** 32)))
-        with_nbrs = cur.hint('merge').join(adj, on='node')
+        with_nbrs = levels[-1].hint('merge').join(adj, on='node')
         if t == 1:
             # first step has no previous node: uniform over out-neighbors,
             # the exact random_walks draw (md5 mod outdeg)
-            stepped = with_nbrs.select(
+            return with_nbrs.select(
                 'walk_id',
                 _uniform_pick(key).alias('node'),
                 F.col('node').alias('prev'),
                 F.col('nbrs').alias('prev_nbrs'),
                 F.lit(t).alias('step'))
-        else:
-            w_of = lambda x: (
-                F.when(x == F.col('prev'), F.lit(inv_p))
-                .when(F.array_contains('prev_nbrs', x), F.lit(1.0))
-                .otherwise(F.lit(inv_q)))
-            weights = F.transform('nbrs', w_of)
-            total = F.aggregate(
-                weights, F.lit(0.0), lambda acc, w: acc + w)
-            # first index (1-based) whose running weight sum reaches the
-            # threshold: a single left-to-right fold — bit-identical to
-            # the oracle's ORDER BY-target window sum
-            thresh = (u01 * total).alias('thresh')
-            pick = F.aggregate(
-                weights,
-                F.struct(F.lit(0.0).alias('cum'),
-                         F.lit(0).alias('idx'),
-                         F.lit(0).alias('i'),
-                         thresh),
-                lambda acc, w: F.struct(
-                    (acc['cum'] + w).alias('cum'),
-                    F.when((acc['idx'] == 0)
-                           & (acc['cum'] + w >= acc['thresh']),
-                           acc['i'] + 1)
-                    .otherwise(acc['idx']).alias('idx'),
-                    (acc['i'] + 1).alias('i'),
-                    acc['thresh'].alias('thresh')),
-                # u01*total can equal total only at u01's dyadic
-                # boundaries; clamp to the last neighbor then
-                lambda acc: F.when(acc['idx'] == 0, acc['i'])
-                             .otherwise(acc['idx']))
-            stepped = with_nbrs.select(
-                'walk_id',
-                F.element_at('nbrs', pick.cast('int')).alias('node'),
-                F.col('node').alias('prev'),
-                F.col('nbrs').alias('prev_nbrs'),
-                F.lit(t).alias('step'))
-            dump_plan(stepped, 'round_node2vec')
-        cur = stepped.localCheckpoint(eager=True)
-        levels.append(cur.select('walk_id', 'node', 'step'))
-    out = levels[0]
-    for lvl in levels[1:]:
-        out = out.unionByName(lvl)
-    adj.unpersist()
-    return out
+        u01 = (F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast('double')
+               / F.lit(float(2 ** 32)))
+        w_of = lambda x: (
+            F.when(x == F.col('prev'), F.lit(inv_p))
+            .when(F.array_contains('prev_nbrs', x), F.lit(1.0))
+            .otherwise(F.lit(inv_q)))
+        weights = F.transform('nbrs', w_of)
+        total = F.aggregate(
+            weights, F.lit(0.0), lambda acc, w: acc + w)
+        # first index (1-based) whose running weight sum reaches the
+        # threshold: a single left-to-right fold — bit-identical to
+        # the oracle's ORDER BY-target window sum
+        thresh = (u01 * total).alias('thresh')
+        pick = F.aggregate(
+            weights,
+            F.struct(F.lit(0.0).alias('cum'),
+                     F.lit(0).alias('idx'),
+                     F.lit(0).alias('i'),
+                     thresh),
+            lambda acc, w: F.struct(
+                (acc['cum'] + w).alias('cum'),
+                F.when((acc['idx'] == 0)
+                       & (acc['cum'] + w >= acc['thresh']),
+                       acc['i'] + 1)
+                .otherwise(acc['idx']).alias('idx'),
+                (acc['i'] + 1).alias('i'),
+                acc['thresh'].alias('thresh')),
+            # u01*total can equal total only at u01's dyadic
+            # boundaries; clamp to the last neighbor then
+            lambda acc: F.when(acc['idx'] == 0, acc['i'])
+                         .otherwise(acc['idx']))
+        return with_nbrs.select(
+            'walk_id',
+            F.element_at('nbrs', pick.cast('int')).alias('node'),
+            F.col('node').alias('prev'),
+            F.col('nbrs').alias('prev_nbrs'),
+            F.lit(t).alias('step'))
+
+    with Rounds() as rounds:
+        adj = rounds.cache(adjacency_table(graph.edges, key_col='node',
+                                           sort=True))
+        levels = rounds.run(
+            'node2vec', _walk_starts(graph.nodes, walks_per_node).select(
+                'walk_id', 'node', F.lit(0).alias('step')),
+            step, walk_length, layers=True)
+    return union_layers(levels, 'walk_id', 'node', 'step')
 
 
 def strongly_connected_components(graph: KG, max_rounds: int = 30,
@@ -849,152 +826,100 @@ def strongly_connected_components(graph: KG, max_rounds: int = 30,
     Determinism: min-label fixpoints only — no RNG, so the DuckDB
     recursive-closure oracle (scc_id = min mutually-reachable id) matches
     exactly. Each propagation step is one equi-join + min-aggregate keyed
-    by node, localCheckpoint-truncated; the peel loop runs once per
-    "layer" of the SCC condensation touched by surviving roots (typically
-    a handful of rounds on web graphs, where one giant SCC dominates).
+    by node; the peel loop runs once per "layer" of the SCC condensation
+    touched by surviving roots (typically a handful of rounds on web
+    graphs, where one giant SCC dominates).
     Raises instead of returning silently-wrong labels if either loop
     exhausts its guard — the ops/components.py convergence lesson.
     """
-    act_nodes = graph.nodes.select('node_id').distinct() \
-        .localCheckpoint(eager=True)
-    act_edges = graph.edges.select('source_id', 'target_id').distinct() \
-        .localCheckpoint(eager=True)
-    assigned = None
-    n_active = act_nodes.count()
-    for _ in range(max_rounds):
-        if n_active == 0:
-            break
-        # both fixpoints below run MANY rounds against this peel
-        # iteration's (static) edge set, so the adjacency-array
-        # materializations (PLANS.md §31) amortize: forward propagation
-        # pushes colors along out-edges, backward marking pulls along
-        # in-edges — one array table per direction per peel round
-        out_adj = adjacency_table(act_edges, out_col='targets',
-                                  dedup=False).persist()
-        in_adj = adjacency_table(act_edges, src='target_id',
-                                 dst='source_id', out_col='sources',
-                                 dedup=False).persist()
-        # 1. forward min-label fixpoint
-        colors = act_nodes.select(
-            'node_id', F.col('node_id').alias('color')) \
-            .localCheckpoint(eager=True)
-        # convergence: the update join already KNOWS whether each node's
-        # label dropped — carry that as a flag column through the
-        # checkpoint and aggregate it with one cached scan, instead of
-        # the previous per-round full-node equi-join + count against the
-        # prior round's table (works for any orderable node-id type)
-        for _p in range(max_prop_rounds):
-            incoming = (
-                out_adj.hint('merge').join(colors, on='node_id')
-                .select(F.explode('targets').alias('node_id'), 'color')
-                .groupBy('node_id')
-                .agg(F.min('color').alias('in_color'))
-            )
-            new_colors = (
-                colors.hint('merge').join(incoming, on='node_id',
-                                          how='left')
-                .select('node_id',
-                        F.least('color', F.coalesce('in_color', 'color'))
-                        .alias('color'),
-                        F.when(F.col('in_color') < F.col('color'),
-                               F.lit(1)).otherwise(F.lit(0)).alias('_chg'))
-            )
-            dump_plan(new_colors, 'round_scc_forward')
-            new_colors = new_colors.localCheckpoint(eager=True)
-            # coalesce: sum() over an empty node set is NULL == converged
-            n_changed = new_colors.agg(
-                F.coalesce(F.sum('_chg'), F.lit(0)).alias('n')
-            ).collect()[0]['n']
-            colors = new_colors.select('node_id', 'color')
-            if n_changed == 0:
-                break
-        else:
-            # release the peel round's caches before surfacing the
-            # guard: a driver that catches and moves on must not keep
-            # the failed graph's adjacency pinned (code-review)
-            out_adj.unpersist()
-            in_adj.unpersist()
-            raise RuntimeError(
-                'scc forward propagation did not converge within '
-                'max_prop_rounds=%d' % max_prop_rounds)
-        # 2+3. backward marking from each color root within its class —
-        # FRONTIER propagation: each round explodes only the nodes marked
-        # LAST round (their in-neighborhoods are the only new reach), and
-        # newly marked nodes are provably disjoint from earlier layers
-        # (the anti-join), so the per-round union-distinct re-scan of the
-        # whole marked set is gone; the marked set is the lazy union of
-        # the per-layer checkpoints. Same set-growth fixpoint, same
-        # result, one BFS layer per round as before.
-        n_part = int(colors.sparkSession.conf.get(
-            'spark.sql.shuffle.partitions'))
-        colors_p = (colors.repartition(n_part, 'node_id')
-                    .sortWithinPartitions('node_id').persist())
-        marked_layers = [colors_p.where(F.col('node_id') == F.col('color'))
-                         .localCheckpoint(eager=True)]
-        for _p in range(max_prop_rounds):
-            frontier = marked_layers[-1]
-            reach_back = (
-                in_adj.hint('merge').join(frontier, on='node_id')
-                .select(F.explode('sources').alias('node_id'),
-                        F.col('color').alias('mark_color'))
-                .distinct()
-            )
-            marked_all = marked_layers[0].select('node_id')
-            for lyr in marked_layers[1:]:
-                marked_all = marked_all.unionByName(lyr.select('node_id'))
-            new_marked = (
-                reach_back
-                .hint('merge').join(colors_p, on='node_id')
-                .where(F.col('color') == F.col('mark_color'))
-                .select('node_id', 'color')
-                .join(marked_all, on='node_id', how='leftanti')
-            )
-            dump_plan(new_marked, 'round_scc_backward')
-            new_marked = new_marked.localCheckpoint(eager=True)
-            if new_marked.isEmpty():
-                break
-            marked_layers.append(new_marked)
-        else:
-            out_adj.unpersist()
-            in_adj.unpersist()
-            colors_p.unpersist()
-            raise RuntimeError(
-                'scc backward marking did not converge within '
-                'max_prop_rounds=%d' % max_prop_rounds)
-        marked = marked_layers[0]
-        for lyr in marked_layers[1:]:
-            marked = marked.unionByName(lyr)
-        colors_p.unpersist()
-        out_adj.unpersist()
-        in_adj.unpersist()
-        scc_rows = marked.select('node_id', F.col('color').alias('scc_id'))
-        assigned = scc_rows if assigned is None \
-            else assigned.unionByName(scc_rows)
+    act_edges = checkpoint(
+        graph.edges.select('source_id', 'target_id').distinct())
+    n_part = int(graph.edges.sparkSession.conf.get(
+        'spark.sql.shuffle.partitions'))
+    assigned = []
+
+    def peel(act_nodes, r):
+        nonlocal act_edges
+        if r > 1:
+            act_edges = checkpoint(
+                act_edges
+                .join(act_nodes.withColumnRenamed('node_id', 'source_id'),
+                      on='source_id', how='leftsemi')
+                .join(act_nodes.withColumnRenamed('node_id', 'target_id'),
+                      on='target_id', how='leftsemi'))
+        with Rounds() as rounds:
+            # both fixpoints run MANY rounds against this peel round's
+            # (static) edge set, so the adjacency arrays (PLANS.md §31)
+            # amortize: colors push along out-edges, marks pull along
+            # in-edges
+            out_adj = rounds.cache(adjacency_table(
+                act_edges, out_col='targets', dedup=False))
+            in_adj = rounds.cache(adjacency_table(
+                act_edges, src='target_id', dst='source_id',
+                out_col='sources', dedup=False))
+
+            # 1. forward min-label fixpoint
+            def forward(colors, _):
+                colors = colors.select('node_id', 'color')
+                incoming = (
+                    out_adj.hint('merge').join(colors, on='node_id')
+                    .select(F.explode('targets').alias('node_id'), 'color')
+                    .groupBy('node_id')
+                    .agg(F.min('color').alias('in_color'))
+                )
+                return (
+                    colors.hint('merge').join(incoming, on='node_id',
+                                              how='left')
+                    .select('node_id',
+                            F.least('color', F.coalesce('in_color', 'color'))
+                            .alias('color'),
+                            F.when(F.col('in_color') < F.col('color'),
+                                   F.lit(1)).otherwise(F.lit(0))
+                            .alias('_chg'))
+                )
+
+            colors = rounds.run(
+                'scc_forward',
+                act_nodes.select('node_id', F.col('node_id').alias('color')),
+                forward, max_prop_rounds, until=none_changed)
+            colors_p = rounds.cache(
+                colors.select('node_id', 'color')
+                .repartition(n_part, 'node_id')
+                .sortWithinPartitions('node_id'))
+
+            # 2+3. backward marking from each color root within its
+            # class, FRONTIER propagation: explode only the nodes marked
+            # LAST round (their in-neighborhoods are the only new reach);
+            # new marks are disjoint from earlier layers (the anti-join)
+            def backward(marked, _):
+                reach_back = (
+                    in_adj.hint('merge').join(marked[-1], on='node_id')
+                    .select(F.explode('sources').alias('node_id'),
+                            F.col('color').alias('mark_color'))
+                    .distinct()
+                )
+                return (
+                    reach_back
+                    .hint('merge').join(colors_p, on='node_id')
+                    .where(F.col('color') == F.col('mark_color'))
+                    .select('node_id', 'color')
+                    .join(union_layers(marked, 'node_id'), on='node_id',
+                          how='leftanti')
+                )
+
+            marked = union_layers(rounds.run(
+                'scc_backward',
+                colors_p.where(F.col('node_id') == F.col('color')),
+                backward, max_prop_rounds, until=is_empty, layers=True))
+        assigned.append(marked.select('node_id',
+                                      F.col('color').alias('scc_id')))
         # 4. peel
-        act_nodes = act_nodes.join(marked.select('node_id'), on='node_id',
-                                   how='leftanti') \
-            .localCheckpoint(eager=True)
-        act_edges = (
-            act_edges
-            .join(act_nodes.withColumnRenamed('node_id', 'source_id'),
-                  on='source_id', how='leftsemi')
-            .join(act_nodes.withColumnRenamed('node_id', 'target_id'),
-                  on='target_id', how='leftsemi')
-            .localCheckpoint(eager=True)
-        )
-        n_active = act_nodes.count()
-        if n_active == 0:
-            # converged on this round — accept even when the range is
-            # exhausted (a top-of-next-iteration check would raise on a
-            # peel that completes exactly on round max_rounds — r5 ADVICE)
-            break
-    else:
-        raise RuntimeError(
-            'scc peel did not converge within max_rounds=%d' % max_rounds)
-    if assigned is None:
-        return graph.nodes.select('node_id').where(F.lit(False)) \
-            .select('node_id', F.col('node_id').alias('scc_id'))
-    return assigned
+        return act_nodes.join(marked.select('node_id'), on='node_id',
+                              how='leftanti')
+
+    Rounds.run('scc_peel', graph.nodes.select('node_id').distinct(), peel,
+               max_rounds, until=lambda _, left: left.count() == 0)
+    return union_layers(assigned)
 
 
 def distance_distribution(graph: KG, max_hops: int = 20,
@@ -1107,32 +1032,27 @@ def betweenness_centrality(graph: KG, max_hops: int = 12,
                 1, 8) < thr)
     else:
         sources = nodes
-    # both adjacency directions are built ONCE from one persisted distinct
-    # pass and shared across origin batches (the per-batch rebuild paid
-    # the 4M-row distinct + two collect_list exchanges again for every
-    # batch — pure waste, the edge set never changes between batches)
-    edges = graph.edges.select('source_id', 'target_id').distinct() \
-        .persist()
-    adj = adjacency_table(edges, key_col='node', dedup=False).persist()
-    in_adj = adjacency_table(edges, src='target_id', dst='source_id',
-                             key_col='node', out_col='srcs',
-                             dedup=False).persist()
-    parts = []
-    for b in range(origin_batches):
-        batch = (sources if origin_batches == 1 else sources.where(
-            F.pmod(F.xxhash64('node_id'), F.lit(origin_batches)) == b))
-        part = _brandes_partial(adj, in_adj, batch, max_hops)
-        if part is not None:
-            parts.append(part.localCheckpoint(eager=True))
-    edges.unpersist()
-    adj.unpersist()
-    in_adj.unpersist()
+    # both adjacency directions are built ONCE from one cached distinct
+    # pass and shared across origin batches (the edge set never changes
+    # between batches)
+    with Rounds() as rounds:
+        edges = rounds.cache(
+            graph.edges.select('source_id', 'target_id').distinct())
+        adj = rounds.cache(adjacency_table(edges, key_col='node',
+                                           dedup=False))
+        in_adj = rounds.cache(adjacency_table(
+            edges, src='target_id', dst='source_id', key_col='node',
+            out_col='srcs', dedup=False))
+        parts = []
+        for b in range(origin_batches):
+            batch = (sources if origin_batches == 1 else sources.where(
+                F.pmod(F.xxhash64('node_id'), F.lit(origin_batches)) == b))
+            part = _brandes_partial(adj, in_adj, batch, max_hops)
+            if part is not None:
+                parts.append(checkpoint(part))
     if not parts:
         return nodes.select('node_id', F.lit(0.0).alias('betweenness'))
-    acc = parts[0]
-    for p in parts[1:]:
-        acc = acc.unionByName(p)
-    got = (acc.groupBy('node_id')
+    got = (union_layers(parts).groupBy('node_id')
            .agg(F.sum('partial').alias('betweenness')))
     return (nodes.join(got, on='node_id', how='left')
             .select('node_id',
@@ -1168,9 +1088,7 @@ def _brandes_partial(adj: DataFrame, in_adj: DataFrame, sources: DataFrame,
     sorts more than a layer. Identical dependency terms, exact σ.
 
     The visited set for the anti-join is the LAZY union of the
-    checkpointed layers (disjoint by construction) — the previous
-    per-hop re-checkpoint of the whole growing set re-materialized
-    O(reached × hops) rows for no information gain.
+    checkpointed layers (disjoint by construction).
 
     Join strategies are left to AQE (no merge pins): every per-layer
     table here is fresh state whose size swings over four orders of
@@ -1179,45 +1097,34 @@ def _brandes_partial(adj: DataFrame, in_adj: DataFrame, sources: DataFrame,
     sort-merge for the big ones — measured 40 → 30 s over the pinned
     plan at 4M edges / 31 origins, with the pinned strategy returning
     exactly at the scale where broadcast would hurt."""
-    layers = [
-        sources.select(F.col(sources.columns[0]).alias('origin'))
-        .select('origin', F.col('origin').alias('node'),
-                F.lit(1).cast('long').alias('sigma'))
-        .localCheckpoint(eager=True)
-    ]
-
-    def _visited():
-        out = layers[0].select('origin', 'node')
-        for lvl in layers[1:]:
-            out = out.unionByName(lvl.select('origin', 'node'))
-        return out
-
-    for t in range(1, max_hops + 1):
+    def forward(layers, _):
         cand = (
             layers[-1].join(adj, on='node')
             .select('origin', F.explode('nbrs').alias('node'), 'sigma')
             .groupBy('origin', 'node')
             .agg(F.sum('sigma').alias('sigma'))
         )
-        new = (cand
-               .join(_visited(), on=['origin', 'node'], how='leftanti'))
-        dump_plan(new, 'round_brandes_forward')
-        new = new.localCheckpoint(eager=True)
-        if new.isEmpty():
-            break
-        layers.append(new)
-    # backward sweep: δ(u) = Σ_{u→v in DAG} σ(u)/σ(v) · (1 + δ(v))
+        return cand.join(union_layers(layers, 'origin', 'node'),
+                         on=['origin', 'node'], how='leftanti')
+
+    layers = Rounds.run(
+        'brandes_forward',
+        sources.select(F.col(sources.columns[0]).alias('origin'))
+        .select('origin', F.col('origin').alias('node'),
+                F.lit(1).cast('long').alias('sigma')),
+        forward, max_hops, until=is_empty, strict=False, layers=True)
     maxd = len(layers) - 1
-    delta_next = None  # δ of layer t+1
-    acc = None         # all (origin, node, delta) rows with distance ≥ 1
-    for t in range(maxd - 1, -1, -1):
+
+    # backward sweep: δ(u) = Σ_{u→v in DAG} σ(u)/σ(v) · (1 + δ(v)), from
+    # the deepest layer up; round r handles layer t = maxd - r
+    def backward(deltas, r):
+        t = maxd - r
         vstate = layers[t + 1]
-        if delta_next is not None:
-            vstate = (vstate
-                      .join(delta_next, on=['origin', 'node'], how='left'))
+        if deltas:
+            vstate = vstate.join(deltas[-1], on=['origin', 'node'],
+                                 how='left')
         else:
-            vstate = vstate.withColumn(
-                'delta', F.lit(None).cast('double'))
+            vstate = vstate.withColumn('delta', F.lit(None).cast('double'))
         preds = (
             vstate.join(in_adj, on='node')
             .select('origin',
@@ -1225,7 +1132,7 @@ def _brandes_partial(adj: DataFrame, in_adj: DataFrame, sources: DataFrame,
                     F.col('delta').alias('delta_w'),
                     F.explode('srcs').alias('node'))
         )
-        cur = (
+        return (
             preds
             .join(layers[t].withColumnRenamed('sigma', 'sig_u'),
                   on=['origin', 'node'])
@@ -1236,17 +1143,15 @@ def _brandes_partial(adj: DataFrame, in_adj: DataFrame, sources: DataFrame,
                 * (F.lit(1.0) + F.coalesce('delta_w', F.lit(0.0))))
                 .alias('delta'))
         )
-        dump_plan(cur, 'round_brandes_backward')
-        cur = cur.localCheckpoint(eager=True)
-        delta_next = cur
-        contrib = cur.where(F.col('origin') != F.col('node'))
-        acc = contrib if acc is None else acc.unionByName(contrib)
-    if acc is None:
-        out = None
-    else:
-        out = (acc.groupBy(F.col('node').alias('node_id'))
-               .agg(F.sum('delta').alias('partial')))
-    return out
+
+    deltas = Rounds.run('brandes_backward', None, backward, maxd,
+                        layers=True)
+    if not deltas:
+        return None
+    return (union_layers([d.where(F.col('origin') != F.col('node'))
+                          for d in deltas])
+            .groupBy(F.col('node').alias('node_id'))
+            .agg(F.sum('delta').alias('partial')))
 
 
 def k_truss(graph: KG, k: int = 4, max_rounds: int = 50) -> DataFrame:
@@ -1258,17 +1163,13 @@ def k_truss(graph: KG, k: int = 4, max_rounds: int = 50) -> DataFrame:
     surviving canonical edge set, explode each into its three edges, count
     per-edge support, drop light edges, repeat to fixpoint (guarded).
     Each round: one self-join pair + one partial-aggregated count + one
-    semi-join, localCheckpoint-flat; the edge set only shrinks, so round
+    semi-join; the edge set only shrinks, so round
     cost is monotone non-increasing and AQE re-plans the joins as the
     truss tightens. (Unlike triangles(), the join is id- not
     degree-ordered — per-edge support needs the concrete edge identities,
     and the iterative shrink bounds the wedge blow-up in practice.)
     """
-    pairs = undirected_pairs(graph.edges).localCheckpoint(eager=True)
-    n_edges = pairs.count()
-    for _ in range(max_rounds):
-        if n_edges == 0:
-            break
+    def peel(pairs, _):
         e1 = pairs.select(F.col('a').alias('a'), F.col('b').alias('x'))
         e2 = pairs.select(F.col('a').alias('x'), F.col('b').alias('c'))
         e3 = pairs.select(F.col('a').alias('a'), F.col('b').alias('c'))
@@ -1285,25 +1186,13 @@ def k_truss(graph: KG, k: int = 4, max_rounds: int = 50) -> DataFrame:
                                     F.col('c').alias('y')))
             .groupBy('x', 'y').agg(F.count(F.lit(1)).alias('support'))
         )
-        kept = (
-            pairs.hint('merge').join(
-                sup.where(F.col('support') >= k - 2)
-                .select(F.col('x').alias('a'), F.col('y').alias('b')),
-                on=['a', 'b'], how='leftsemi')
-            .localCheckpoint(eager=True)
-        )
-        m = kept.count()
-        pairs = kept
-        # m == 0 is also terminal: an empty edge set reached exactly on
-        # the final permitted round must not raise (r5 ADVICE — the
-        # top-of-next-iteration check never runs when the range is spent)
-        if m == n_edges or m == 0:
-            break
-        n_edges = m
-    else:
-        raise RuntimeError(
-            'k_truss did not converge within max_rounds=%d' % max_rounds)
-    return pairs
+        return pairs.hint('merge').join(
+            sup.where(F.col('support') >= k - 2)
+            .select(F.col('x').alias('a'), F.col('y').alias('b')),
+            on=['a', 'b'], how='leftsemi')
+
+    return Rounds.run('k_truss', undirected_pairs(graph.edges), peel,
+                      max_rounds, until=count_settled())
 
 
 def graph_structure_summary(graph: KG) -> DataFrame:
@@ -1400,32 +1289,21 @@ def degree_assortativity(graph: KG) -> DataFrame:
         F.when(den != 0, num / den).alias('assortativity'))
 
 
-def _reachable_fixpoint(seeds: DataFrame, edges: DataFrame, forward: bool,
-                        max_rounds: int) -> DataFrame:
+def _reachable_fixpoint(op: str, seeds: DataFrame, edges: DataFrame,
+                        forward: bool, max_rounds: int) -> DataFrame:
     """All nodes reachable from ``seeds`` (seeds included) following edges
     forward or backward — frontier-free set-growth fixpoint: each round one
-    equi-join + union-distinct, localCheckpoint-flat."""
+    equi-join + union-distinct."""
     src, dst = ('source_id', 'target_id') if forward \
         else ('target_id', 'source_id')
-    reached = seeds.select('node_id').distinct().localCheckpoint(eager=True)
-    n = reached.count()
-    for _ in range(max_rounds):
-        grown = (
-            reached.unionByName(
-                edges.join(reached.withColumnRenamed('node_id', src),
-                           on=src)
-                .select(F.col(dst).alias('node_id')))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        m = grown.count()
-        reached = grown
-        if m == n:
-            return reached
-        n = m
-    raise RuntimeError(
-        'reachability fixpoint did not converge within max_rounds=%d'
-        % max_rounds)
+
+    def grow(reached, _):
+        return reached.unionByName(
+            edges.join(reached.withColumnRenamed('node_id', src), on=src)
+            .select(F.col(dst).alias('node_id'))).distinct()
+
+    return Rounds.run(op, seeds.select('node_id').distinct(), grow,
+                      max_rounds, until=count_settled())
 
 
 def bowtie_decomposition(graph: KG, max_rounds: int = 64) -> DataFrame:
@@ -1440,36 +1318,35 @@ def bowtie_decomposition(graph: KG, max_rounds: int = 64) -> DataFrame:
     seeded at the core — each round one equi-join + union-distinct keyed
     by node. The core choice is a 1-row broadcast semi-join, not a driver
     collect."""
-    scc = strongly_connected_components(graph).persist()
-    sizes = scc.groupBy('scc_id').agg(F.count(F.lit(1)).alias('n'))
-    core_id = sizes.orderBy(F.col('n').desc(), 'scc_id') \
-        .limit(1).select('scc_id')
-    core = scc.join(F.broadcast(core_id), on='scc_id', how='leftsemi') \
-        .select('node_id').localCheckpoint(eager=True)
-    edges = graph.edges.select('source_id', 'target_id').distinct() \
-        .persist()
-    fwd = _reachable_fixpoint(core, edges, forward=True,
-                              max_rounds=max_rounds)
-    bwd = _reachable_fixpoint(core, edges, forward=False,
-                              max_rounds=max_rounds)
-    out = (
-        graph.nodes.select('node_id').distinct()
-        .join(core.select('node_id', F.lit(True).alias('_core')),
-              on='node_id', how='left')
-        .join(fwd.select('node_id', F.lit(True).alias('_fwd')),
-              on='node_id', how='left')
-        .join(bwd.select('node_id', F.lit(True).alias('_bwd')),
-              on='node_id', how='left')
-        .select(
-            'node_id',
-            F.when(F.col('_core'), 'CORE')
-            .when(F.col('_bwd'), 'IN')
-            .when(F.col('_fwd'), 'OUT')
-            .otherwise('OTHER').alias('component'))
-    )
-    scc.unpersist()
-    edges.unpersist()
-    return out
+    with Rounds() as rounds:
+        scc = rounds.cache(strongly_connected_components(graph))
+        sizes = scc.groupBy('scc_id').agg(F.count(F.lit(1)).alias('n'))
+        core_id = sizes.orderBy(F.col('n').desc(), 'scc_id') \
+            .limit(1).select('scc_id')
+        core = checkpoint(
+            scc.join(F.broadcast(core_id), on='scc_id', how='leftsemi')
+            .select('node_id'))
+        edges = rounds.cache(
+            graph.edges.select('source_id', 'target_id').distinct())
+        fwd = _reachable_fixpoint('bowtie_out', core, edges, True,
+                                  max_rounds)
+        bwd = _reachable_fixpoint('bowtie_in', core, edges, False,
+                                  max_rounds)
+        return (
+            graph.nodes.select('node_id').distinct()
+            .join(core.select('node_id', F.lit(True).alias('_core')),
+                  on='node_id', how='left')
+            .join(fwd.select('node_id', F.lit(True).alias('_fwd')),
+                  on='node_id', how='left')
+            .join(bwd.select('node_id', F.lit(True).alias('_bwd')),
+                  on='node_id', how='left')
+            .select(
+                'node_id',
+                F.when(F.col('_core'), 'CORE')
+                .when(F.col('_bwd'), 'IN')
+                .when(F.col('_fwd'), 'OUT')
+                .otherwise('OTHER').alias('component'))
+        )
 
 
 def label_propagation_communities(graph: KG,
@@ -1483,23 +1360,9 @@ def label_propagation_communities(graph: KG,
     isolated nodes keep their own id. The argmax is a two-phase
     aggregation over a min(struct(-count, label)) — partial aggregation
     keeps a 10^6-degree hub's update at one state row per (node, label)
-    per map task, no per-node window sort anywhere. localCheckpoint
-    truncates lineage so round N's plan equals round 1's (same discipline
-    as the PageRank loop).
+    per map task, no per-node window sort anywhere.
     """
-    pairs = undirected_pairs(graph.edges)
-    adj = (
-        pairs.select(F.col('a').alias('node_id'), F.col('b').alias('nb'))
-        .unionByName(
-            pairs.select(F.col('b').alias('node_id'),
-                         F.col('a').alias('nb')))
-        .persist()
-    )
-    nodes = graph.nodes.select('node_id').persist()
-    labels = nodes.select(
-        'node_id', F.col('node_id').alias('community')) \
-        .localCheckpoint(eager=True)
-    for _ in range(n_iterations):
+    def step(labels, _):
         counts = (
             adj.hint('merge')
             .join(labels.select(F.col('node_id').alias('nb'),
@@ -1514,16 +1377,25 @@ def label_propagation_communities(graph: KG,
                  .alias('s'))
             .select('node_id', F.col('s.community').alias('new_community'))
         )
-        labels = (
+        return (
             labels.hint('merge').join(best, on='node_id', how='left')
             .select('node_id',
                     F.coalesce('new_community', 'community')
                     .alias('community'))
-            .localCheckpoint(eager=True)
         )
-    adj.unpersist()
-    nodes.unpersist()
-    return labels
+
+    pairs = undirected_pairs(graph.edges)
+    with Rounds() as rounds:
+        adj = rounds.cache(
+            pairs.select(F.col('a').alias('node_id'), F.col('b').alias('nb'))
+            .unionByName(
+                pairs.select(F.col('b').alias('node_id'),
+                             F.col('a').alias('nb'))))
+        nodes = rounds.cache(graph.nodes.select('node_id'))
+        return rounds.run(
+            'label_propagation',
+            nodes.select('node_id', F.col('node_id').alias('community')),
+            step, n_iterations)
 
 
 def community_sizes(graph: KG, n_iterations: int = 5) -> DataFrame:
@@ -1627,8 +1499,7 @@ def hyperball_harmonic(graph: KG, p: int = 64,
     BFS (infeasible at 10^9 hosts), while HyperBall keeps ``p`` small
     registers per node (p=64 → ~13% per-counter standard error) and
     each round is ONE equi-join + ONE register-wise max aggregation —
-    the same shuffle shape as a PageRank round, with localCheckpoint
-    keeping round-N's plan equal to round-1's. Registers ride the
+    the same shuffle shape as a PageRank round. Registers ride the
     shuffle as ``p`` int columns (map-side partial max), so hub nodes
     with huge in-degree arrive at the reducer pre-combined.
 
@@ -1653,25 +1524,15 @@ def hyperball_harmonic(graph: KG, p: int = 64,
         F.when(F.col('_j') == i, F.col('_rho'))
         .otherwise(F.lit(0)).cast('int')
         for i in range(p)])
-    state = seeded.select('node_id', init_regs.alias('regs'))
-    state = (state
+    state = (seeded
+             .select('node_id', init_regs.alias('regs'))
              .select('node_id', 'regs',
                      _hll_estimate(F.col('regs'), p).alias('est'),
-                     F.lit(0.0).alias('harmonic'))
-             .localCheckpoint(eager=True))
-
-    # ball of v absorbs the balls of its IN-neighbors: edge w→v flows w's
-    # counter to v. The push side is materialized ONCE as a per-source
-    # out-adjacency array (same rewrite as _power_iteration/hits): each
-    # round then sort-merge-joins O(sources) adjacency rows against the
-    # O(n) register table instead of O(edges) pair rows, and the explode
-    # feeds the register-wise partial max directly — identical merged
-    # registers, 4× fewer sorted rows per round on the 4M-edge graph.
-    push_adj = adjacency_table(graph.edges, key_col='nbr',
-                               out_col='targets').persist()
+                     F.lit(0.0).alias('harmonic')))
 
     reg_cols = ['_r{}'.format(i) for i in range(p)]
-    for t in range(1, t_max + 1):
+
+    def step(state, t):
         # merge-pinned: the register table is O(n·p) and fresh each
         # round — re-broadcasting it under a size-threshold decision
         # pays per-round driver fan-out (same rationale as PageRank)
@@ -1700,15 +1561,24 @@ def hyperball_harmonic(graph: KG, p: int = 64,
                             F.max('harmonic').alias('harmonic')]))
                   .select('node_id', F.array(*reg_cols).alias('regs'),
                           'prev_est', 'harmonic'))
-        new_state = (merged
-                     .select('node_id', 'regs', 'prev_est', 'harmonic',
-                             _hll_estimate(F.col('regs'), p).alias('est'))
-                     .select('node_id', 'regs', 'est',
-                             (F.col('harmonic')
-                              + F.greatest(F.lit(0.0),
-                                           F.col('est') - F.col('prev_est'))
-                              / t).alias('harmonic')))
-        dump_plan(new_state, 'round_hyperball')
-        state = new_state.localCheckpoint(eager=True)
-    push_adj.unpersist()
+        return (merged
+                .select('node_id', 'regs', 'prev_est', 'harmonic',
+                        _hll_estimate(F.col('regs'), p).alias('est'))
+                .select('node_id', 'regs', 'est',
+                        (F.col('harmonic')
+                         + F.greatest(F.lit(0.0),
+                                      F.col('est') - F.col('prev_est'))
+                         / t).alias('harmonic')))
+
+    with Rounds() as rounds:
+        # ball of v absorbs the balls of its IN-neighbors: edge w→v flows w's
+        # counter to v. The push side is materialized ONCE as a per-source
+        # out-adjacency array (same rewrite as _power_iteration/hits): each
+        # round then sort-merge-joins O(sources) adjacency rows against the
+        # O(n) register table instead of O(edges) pair rows, and the explode
+        # feeds the register-wise partial max directly — identical merged
+        # registers, 4× fewer sorted rows per round on the 4M-edge graph.
+        push_adj = rounds.cache(adjacency_table(graph.edges, key_col='nbr',
+                                                out_col='targets'))
+        state = rounds.run('hyperball', state, step, t_max)
     return state.select('node_id', F.col('harmonic').alias('harmonic_est'))

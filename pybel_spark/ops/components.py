@@ -11,16 +11,15 @@ Pegasus-style HCC): labels chase min-pointers two hops per round, so
 convergence is O(log diameter) rounds rather than O(diameter) — a
 10^6-hop chain (pathological web-graph shape) converges in ~20 rounds.
 Each round is an equi-join + min-aggregate plus one self-join, all on
-uniformly-distributed md5 node ids (skew-free by construction); lineage is
-truncated per round with ``localCheckpoint`` so plans stay flat at any
-iteration count. If the iteration budget is ever exhausted before the
-fixed point, the function RAISES instead of returning silently wrong
-labels (downstream count_components / left_outer_join / component-size
-rollups would all be corrupted).
+uniformly-distributed md5 node ids (skew-free by construction). If the
+iteration budget is ever exhausted before the fixed point, the function
+RAISES instead of returning silently wrong labels (downstream
+count_components / left_outer_join / component-size rollups would all be
+corrupted).
 """
 from pyspark.sql import DataFrame, functions as F
 
-from .graph import KG, induce_by_nodes, left_full_join
+from .graph import KG, Rounds, induce_by_nodes, left_full_join, none_changed
 
 
 def connected_components(graph: KG, max_iterations: int = 50) -> DataFrame:
@@ -51,23 +50,12 @@ def min_label_propagation(nodes: DataFrame, edges: DataFrame,
         raise ValueError('max_iterations must be >= 1 (got {}) — zero '
                          'rounds would return unconverged singleton labels'
                          .format(max_iterations))
-    # symmetrize: weakly connected ignores direction
-    sym = edges.unionByName(
-        edges.select(F.col('target_id').alias('source_id'),
-                     F.col('source_id').alias('target_id'))
-    ).distinct().persist()
-
-    labels = nodes.select(
-        'node_id', F.col('node_id').alias('component'))
-    labels = labels.localCheckpoint(eager=True)
-
     # join strategies are left to AQE (runtime sizes pick broadcast for
     # small label tables, sort-merge at scale — the _brandes_partial A/B);
-    # convergence rides a change flag computed INSIDE the update join and
-    # aggregated from the fresh checkpoint, replacing the previous
-    # per-round full-table equi-join + count
-    n_changed = 0
-    for it in range(max_iterations):
+    # convergence rides a change flag computed INSIDE the update join
+    # (:func:`none_changed`), not a per-round full-table equi-join + count
+    def step(labels, r):
+        labels = labels.select('node_id', 'component')
         neighbor_min = (
             sym
             .join(labels.withColumnRenamed('node_id', 'source_id'),
@@ -76,7 +64,7 @@ def min_label_propagation(nodes: DataFrame, edges: DataFrame,
             .agg(F.min('component').alias('neighbor_component'))
         )
         new_labels = labels.join(neighbor_min, on='node_id', how='left')
-        if it == 0:
+        if r == 1:
             # round 1: every label is its own id, so label(label(u)) == u
             # — the pointer-doubling self-join is a provable no-op
             new_labels = new_labels.withColumn(
@@ -100,26 +88,22 @@ def min_label_propagation(nodes: DataFrame, edges: DataFrame,
             F.coalesce('neighbor_component', F.col('component')),
             F.coalesce('grand_component', F.col('component')),
         )
-        new_labels = new_labels.select(
+        return new_labels.select(
             'node_id', best.alias('component'),
             F.when(best < F.col('component'), F.lit(1)).otherwise(F.lit(0))
             .alias('_chg'))
-        new_labels = new_labels.localCheckpoint(eager=True)
-        # coalesce: sum() over an EMPTY label table is NULL, which must
-        # read as converged (0), not as "still changing"
-        n_changed = new_labels.agg(
-            F.coalesce(F.sum('_chg'), F.lit(0)).alias('n')
-        ).collect()[0]['n']
-        labels = new_labels.select('node_id', 'component')
-        if n_changed == 0:
-            break
-    sym.unpersist()
-    if n_changed != 0:
-        raise RuntimeError(
-            'min-label propagation did not converge within {} iterations '
-            '({} labels still changing) — raise max_iterations'.format(
-                max_iterations, n_changed))
-    return labels
+
+    with Rounds() as rounds:
+        # symmetrize: weakly connected ignores direction
+        sym = rounds.cache(edges.unionByName(
+            edges.select(F.col('target_id').alias('source_id'),
+                         F.col('source_id').alias('target_id'))
+        ).distinct())
+        labels = rounds.run(
+            'min_label_propagation',
+            nodes.select('node_id', F.col('node_id').alias('component')),
+            step, max_iterations, until=none_changed)
+    return labels.select('node_id', 'component')
 
 
 def count_components(graph: KG) -> int:

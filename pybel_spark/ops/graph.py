@@ -16,9 +16,9 @@ def dump_plan(df: DataFrame, tag: str) -> None:
     """Debug-only: write ``df.explain('formatted')`` to
     ``$PYBEL_EXPLAIN_DIR/<tag>_$PYBEL_EXPLAIN_SUFFIX.txt`` (first call per
     tag wins). The iterative operators checkpoint each round, so their
-    RETURNED DataFrame's plan is a bare ``Scan ExistingRDD``; this hook
-    captures the real per-round plan from inside the loop. No-op unless
-    the env var is set — zero cost on normal runs."""
+    RETURNED DataFrame's plan is a bare ``Scan ExistingRDD``;
+    :meth:`Rounds.run` calls this hook on a live round plan instead. No-op
+    unless the env var is set — zero cost on normal runs."""
     out_dir = os.environ.get('PYBEL_EXPLAIN_DIR')
     if not out_dir:
         return
@@ -30,6 +30,125 @@ def dump_plan(df: DataFrame, tag: str) -> None:
         df._jdf.queryExecution(), 'formatted')
     with open(path, 'w') as f:
         f.write(plan)
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` now and cut its lineage (eager local checkpoint)
+    — how the iterative operators materialize a table."""
+    return df.localCheckpoint(eager=True)
+
+
+def union_layers(layers, *cols) -> DataFrame:
+    """Lazy union of a layer-growing loop's checkpointed layers, each
+    projected onto ``cols`` when given. Every layer is a plain scan, so the
+    union plan stays flat however many layers there are."""
+    if cols:
+        layers = [lyr.select(*cols) for lyr in layers]
+    return reduce(lambda a, b: a.unionByName(b), layers)
+
+
+def is_empty(prev: DataFrame, new: DataFrame) -> bool:
+    """``until`` predicate: the round added no row."""
+    return new.isEmpty()
+
+
+def none_changed(prev: DataFrame, new: DataFrame) -> bool:
+    """``until`` predicate for steps that flag each row whose value dropped
+    in an int ``_chg`` column: no row is flagged. The flag comes out of the
+    update join, so convergence costs one scan of the fresh checkpoint,
+    not a join against the previous round's table."""
+    # coalesce: sum() over an empty table is NULL, which reads as converged
+    return new.agg(F.coalesce(F.sum('_chg'), F.lit(0)).alias('n')) \
+        .collect()[0]['n'] == 0
+
+
+def count_settled():
+    """A fresh ``until`` predicate for peel and reach fixpoints: the
+    state's row count stopped changing or reached 0. It keeps the last
+    count, so each state is counted once."""
+    counts = []
+
+    def settled(prev, new):
+        if not counts:
+            counts.append(prev.count())
+        counts.append(new.count())
+        return counts[-1] in (counts[-2], 0)
+    return settled
+
+
+class Rounds:
+    """The round driver of every iterative graph operator (PageRank, HITS,
+    HyperBall, BFS, Bellman-Ford, SCC, Brandes, walks, label propagation,
+    the k-core / k-truss peels and the reach fixpoints).
+
+    Used as a context manager, it releases every table registered with
+    :meth:`cache` when the block exits, on return and on raise. :meth:`run`
+    owns the round policy:
+
+    - the initial state and each round's new state are eagerly local-
+      checkpointed (:func:`checkpoint`), which truncates the lineage so
+      round N's plan equals round 1's however many rounds run;
+    - round 2's live plan, the steady state, goes to :func:`dump_plan` as
+      ``round_<op>`` (round 1 is planned before the cached side tables
+      exist, so its plan re-exchanges them);
+    - a loop with an ``until`` predicate that reaches ``max_rounds``
+      before it holds raises a ``RuntimeError`` naming ``op`` instead of
+      returning unconverged, silently wrong state.
+
+    A step that must materialize a second table mid-round (the last HITS
+    authority vector, the SCC peel's surviving edges) calls
+    :func:`checkpoint` itself."""
+
+    def __init__(self):
+        self._cached = []
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc_info):
+        for df in self._cached:
+            df.unpersist()
+
+    def cache(self, df: DataFrame) -> DataFrame:
+        """Persist a side table the rounds read, until the block exits."""
+        df = df.persist()
+        self._cached.append(df)
+        return df
+
+    @staticmethod
+    def run(op: str, state, step, max_rounds: int, until=None,
+            strict: bool = True, layers: bool = False):
+        """Run ``new = step(state, r)`` for r = 1 .. ``max_rounds`` and
+        return the last state.
+
+        ``until(prev, new)`` is asked after each round, on checkpointed
+        states, and the loop stops at the first round where it holds.
+        Without it exactly ``max_rounds`` rounds run. ``strict=False``
+        makes the cap a bound (hop-bounded BFS) rather than a failure.
+
+        ``layers=True`` is for layer-growing loops: ``step`` gets the list
+        of every checkpointed layer so far and returns the next one, a
+        layer for which ``until`` holds is dropped, and the list is
+        returned. ``state=None`` starts with no table."""
+        if state is not None:
+            state = checkpoint(state)
+        trail = [state] if layers and state is not None else []
+        for r in range(1, max_rounds + 1):
+            new = step(trail if layers else state, r)
+            if r == 2:
+                dump_plan(new, 'round_' + op)
+            new = checkpoint(new)
+            done = until is not None and until(state, new)
+            if layers and not done:
+                trail.append(new)
+            state = new
+            if done:
+                break
+        else:
+            if until is not None and strict:
+                raise RuntimeError('{} did not converge within {} rounds'
+                                   .format(op, max_rounds))
+        return trail if layers else state
 
 
 @dataclass
@@ -120,7 +239,7 @@ def adjacency_table(edges: DataFrame, src: str = 'source_id',
     O(state) table against this instead of the O(edges) pair table and
     explodes into the partial aggregate. ``sort=True`` orders neighbors
     by ascending value — the rank order the walk oracles mirror.
-    Callers persist/unpersist the result around their rounds.
+    Callers cache the result around their rounds (:meth:`Rounds.cache`).
 
     ``partitioned=True`` (default) hash-repartitions the table on
     ``key_col`` to the session's ``spark.sql.shuffle.partitions`` and

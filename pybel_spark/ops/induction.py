@@ -89,29 +89,6 @@ def expand_downstream_causal(universe: KG, graph: KG) -> KG:
         graph, get_downstream_causal_subgraph(universe, graph.node_ids()))
 
 
-def get_equivalent_node_ids(graph: KG, node_ids, max_iterations=10) -> DataFrame:
-    """Transitive closure over equivalentTo edges to a fixpoint
-    (reference graph.py:721-768). Equivalence classes have tiny diameter, so
-    a handful of iterative joins suffices."""
-    eq = graph.edges.where(F.col('relation') == 'equivalentTo') \
-        .select('source_id', 'target_id').persist()
-    frontier = _as_id_df(graph, node_ids).distinct()
-    seen = frontier
-    for _ in range(max_iterations):
-        neighbors = (
-            eq.join(F.broadcast(frontier.withColumnRenamed('node_id', 'source_id')),
-                    on='source_id', how='leftsemi')
-            .select(F.col('target_id').alias('node_id'))
-        )
-        new = neighbors.exceptAll(seen).distinct()
-        if new.isEmpty():
-            break
-        seen = seen.unionByName(new).distinct()
-        frontier = new
-    eq.unpersist()
-    return seen
-
-
 def _as_id_df(graph: KG, node_ids) -> DataFrame:
     if isinstance(node_ids, DataFrame):
         return node_ids.select(F.col(node_ids.columns[0]).alias('node_id'))

@@ -10,7 +10,8 @@ over paths.
 """
 from pyspark.sql import DataFrame, functions as F
 
-from .graph import KG, adjacency_table, dump_plan, induce_by_nodes
+from .graph import (KG, Rounds, adjacency_table, induce_by_nodes, is_empty,
+                    union_layers)
 
 
 def bfs_distances(graph: KG, sources, max_hops=6, directed=True) -> DataFrame:
@@ -29,22 +30,13 @@ def bfs_distances(graph: KG, sources, max_hops=6, directed=True) -> DataFrame:
             graph.edges.select(
                 F.col('target_id').alias('source_id'),
                 F.col('source_id').alias('target_id')))
-    adj = adjacency_table(edges).persist()
-
     if isinstance(sources, DataFrame):
         seeds = sources.select(F.col(sources.columns[0]).alias('origin'))
     else:
         spark = graph.nodes.sparkSession
         seeds = spark.createDataFrame([(s,) for s in sources], ['origin'])
 
-    # per-hop LAYER list: layers are disjoint by construction, so the
-    # visited set for the anti-join (and the returned distance table) is
-    # their lazy union — the previous per-hop re-checkpoint of the whole
-    # growing distance table re-materialized O(reached × hops) rows
-    layers = [seeds.select(
-        'origin', F.col('origin').alias('node_id'),
-        F.lit(0).alias('distance')).localCheckpoint()]
-    for hop in range(1, max_hops + 1):
+    def hop(layers, r):
         # join strategy left to AQE: frontier/visited sizes swing orders
         # of magnitude across hops, and AQE's runtime sizes pick
         # broadcast for the small hops and sort-merge for the big ones —
@@ -54,26 +46,21 @@ def bfs_distances(graph: KG, sources, max_hops=6, directed=True) -> DataFrame:
             layers[-1]
             .join(adj, on='node_id')
             .select('origin', F.explode('nbrs').alias('node_id'),
-                    F.lit(hop).alias('distance'))
+                    F.lit(r).alias('distance'))
             .distinct()
         )
-        visited = layers[0].select('origin', 'node_id')
-        for lvl in layers[1:]:
-            visited = visited.unionByName(lvl.select('origin', 'node_id'))
-        # localCheckpoint truncates the iterative lineage — without it every
-        # round re-evaluates the whole union chain from the source scan
-        new = neighbors \
-            .join(visited, on=['origin', 'node_id'], how='leftanti')
-        dump_plan(new, 'round_bfs')
-        new = new.localCheckpoint()
-        if new.isEmpty():
-            break
-        layers.append(new)
-    adj.unpersist()
-    distances = layers[0]
-    for lvl in layers[1:]:
-        distances = distances.unionByName(lvl)
-    return distances
+        # layers are disjoint by construction, so the visited set for the
+        # anti-join (and the returned distance table) is their lazy union
+        return neighbors.join(union_layers(layers, 'origin', 'node_id'),
+                              on=['origin', 'node_id'], how='leftanti')
+
+    with Rounds() as rounds:
+        adj = rounds.cache(adjacency_table(edges))
+        layers = rounds.run(
+            'bfs', seeds.select('origin', F.col('origin').alias('node_id'),
+                                F.lit(0).alias('distance')),
+            hop, max_hops, until=is_empty, strict=False, layers=True)
+    return union_layers(layers)
 
 
 def get_subgraph_by_all_shortest_paths(graph: KG, node_ids, max_hops=6,

@@ -22,6 +22,10 @@ output is complete and duplicate-free.
    complete write.
 4. Verify: edge_ids unique, triples == expected.
 
+Every run gets ``SPARK_LOCAL_DIRS`` pointing at a drill-owned dir, removed
+at the end and on failure: a SIGKILLed JVM runs no shutdown hook, so the
+block-manager dirs of the killed runs would otherwise stay in /tmp.
+
 Usage: python scripts/drill_resume.py [n_docs]
 """
 import json
@@ -34,6 +38,8 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 OUT = '/tmp/pybel_spark_drill_out'
+LOCAL_DIRS = '/tmp/pybel_spark_drill_local'
+RUN_ENV = dict(os.environ, SPARK_LOCAL_DIRS=LOCAL_DIRS)
 N_BUCKETS = 32
 TABLES = ('nodes', 'edges', 'warnings')
 #: seconds a run gets to reach the point at which the drill kills it
@@ -44,8 +50,8 @@ def launch(n_docs):
     return subprocess.Popen(
         [sys.executable, 'scripts/run_pipeline.py', '--synthetic', str(n_docs),
          '--output', OUT, '--buckets', str(N_BUCKETS)],
-        cwd=REPO, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
-        text=True, preexec_fn=os.setsid)
+        cwd=REPO, env=RUN_ENV, stdout=subprocess.PIPE,
+        stderr=subprocess.DEVNULL, text=True, preexec_fn=os.setsid)
 
 
 def kill(proc):
@@ -170,7 +176,15 @@ def main():
     if len(sys.argv) > 2:
         raise SystemExit('usage: python scripts/drill_resume.py [n_docs]')
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 20_000
+    shutil.rmtree(LOCAL_DIRS, ignore_errors=True)
+    os.makedirs(LOCAL_DIRS)
+    try:
+        drill(n_docs)
+    finally:
+        shutil.rmtree(LOCAL_DIRS, ignore_errors=True)
 
+
+def drill(n_docs):
     shutil.rmtree(OUT, ignore_errors=True)
 
     print('launching run 1 (killed at its first commit)...')
@@ -234,7 +248,8 @@ print(json.dumps({{'edges': n_edges, 'unique_edge_ids': n_ids,
 spark.stop()
 '''.format(repo=REPO, out=OUT, n=n_docs)
     res = subprocess.run([sys.executable, '-c', verify], cwd=REPO,
-                         capture_output=True, text=True, check=True)
+                         env=RUN_ENV, capture_output=True, text=True,
+                         check=True)
     verdict = json.loads(res.stdout.strip().splitlines()[-1])
     print('verification:', json.dumps(verdict))
     assert verdict['edges'] == verdict['unique_edge_ids'], 'duplicate edges!'

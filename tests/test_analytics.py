@@ -7,7 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from pybel_spark.corpus import generate_documents
-from pybel_spark.ops import KG, analytics
+from pybel_spark.ops import KG, analytics, components
+from pybel_spark.ops.paths import bfs_distances
 from pybel_spark.pipeline import build_graph
 
 N_DOCS = 120
@@ -906,3 +907,104 @@ def test_distance_distribution_sampled_subset(kg):
     assert set(samp) <= set(full)
     assert all(samp[d] <= full[d] for d in samp)
     assert samp  # the md5 threshold at 0.5 keeps some origins
+
+
+# --- the round driver (ops/graph.Rounds): cache release and plan capture.
+# These clear the session cache, so they sit at the end of the module.
+
+@pytest.fixture(scope='module')
+def bowtie_graph(spark):
+    """SCC {a, b, c} (a triangle) with tail c -> d -> e, f -> a into the
+    core, and g -> h apart: every peel and reach loop needs >= 2 rounds."""
+    edges = [('a', 'b', 1.0), ('b', 'c', 2.0), ('c', 'a', 1.0),
+             ('c', 'd', 3.0), ('d', 'e', 1.0), ('f', 'a', 2.0),
+             ('g', 'h', 1.0)]
+    return KG(spark.createDataFrame([(n,) for n in 'abcdefgh'],
+                                    'node_id string'),
+              spark.createDataFrame(
+                  edges, 'source_id string, target_id string, w double'))
+
+
+def _cache_is_empty(spark):
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _seeds(spark):
+    return spark.createDataFrame([('a',)], 'node_id string')
+
+
+_LOOP_CALLS = {
+    'pagerank': lambda g, s: analytics.pagerank(g, n_iterations=3),
+    'personalized_pagerank': lambda g, s: analytics.personalized_pagerank(
+        g, _seeds(s), n_iterations=3),
+    'pagerank_weighted': lambda g, s: analytics.pagerank_weighted(
+        g, 'w', n_iterations=3),
+    'hits': lambda g, s: analytics.hits(g, n_iterations=3),
+    'weighted_shortest_paths': lambda g, s:
+        analytics.weighted_shortest_paths(g, 'w', _seeds(s)),
+    'random_walks': lambda g, s: analytics.random_walks(g, 3),
+    'node2vec_walks': lambda g, s: analytics.node2vec_walks(g, 3),
+    'strongly_connected_components': lambda g, s:
+        analytics.strongly_connected_components(g),
+    'betweenness_centrality': lambda g, s:
+        analytics.betweenness_centrality(g, origin_batches=2),
+    'k_core': lambda g, s: analytics.k_core(g, 2),
+    'k_truss': lambda g, s: analytics.k_truss(g, 3),
+    'bowtie_decomposition': lambda g, s: analytics.bowtie_decomposition(g),
+    'label_propagation_communities': lambda g, s:
+        analytics.label_propagation_communities(g),
+    'hyperball_harmonic': lambda g, s: analytics.hyperball_harmonic(
+        g, p=16, t_max=3),
+    'bfs_distances': lambda g, s: bfs_distances(g, ['a', 'f'], max_hops=3),
+    'min_label_propagation': lambda g, s: components.connected_components(g),
+}
+
+
+@pytest.mark.parametrize('name', sorted(_LOOP_CALLS))
+def test_loop_releases_cached_tables(spark, bowtie_graph, name):
+    """Every iterative operator leaves the session cache as it found it."""
+    spark.catalog.clearCache()
+    _LOOP_CALLS[name](bowtie_graph, spark).collect()
+    assert _cache_is_empty(spark), name
+
+
+def test_hits_empty_graph_releases_cached_tables(spark):
+    empty = KG(spark.createDataFrame([], 'node_id string'),
+               spark.createDataFrame([], 'source_id string, target_id string'))
+    spark.catalog.clearCache()
+    assert analytics.hits(empty).count() == 0
+    assert _cache_is_empty(spark)
+
+
+_UNCONVERGED_CALLS = {
+    'weighted_shortest_paths': lambda g, s:
+        analytics.weighted_shortest_paths(g, 'w', _seeds(s), max_rounds=1),
+    'bowtie': lambda g, s: analytics.bowtie_decomposition(g, max_rounds=1),
+    'k_core': lambda g, s: analytics.k_core(g, 2, max_rounds=1),
+    'k_truss': lambda g, s: analytics.k_truss(g, 3, max_rounds=1),
+    'scc': lambda g, s: analytics.strongly_connected_components(
+        g, max_rounds=1),
+    'min_label_propagation': lambda g, s: components.connected_components(
+        g, max_iterations=1),
+}
+
+
+@pytest.mark.parametrize('name', sorted(_UNCONVERGED_CALLS))
+def test_unconverged_loop_raises_and_releases(spark, bowtie_graph, name):
+    """A loop cut at its round cap raises a RuntimeError naming the loop
+    and still releases every cached side table."""
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match=name + r'\w* did not converge'):
+        _UNCONVERGED_CALLS[name](bowtie_graph, spark)
+    assert _cache_is_empty(spark), name
+
+
+def test_round_plan_captured_at_round_two(spark, bowtie_graph, tmp_path,
+                                          monkeypatch):
+    """With PYBEL_EXPLAIN_DIR set, a loop writes its steady-state round-2
+    plan once; a one-round loop has no round 2 and writes none."""
+    monkeypatch.setenv('PYBEL_EXPLAIN_DIR', str(tmp_path))
+    analytics.pagerank(bowtie_graph, n_iterations=1)
+    assert not list(tmp_path.glob('round_pagerank_*.txt'))
+    analytics.pagerank(bowtie_graph, n_iterations=3)
+    assert len(list(tmp_path.glob('round_pagerank_*.txt'))) == 1
